@@ -53,7 +53,7 @@ def _poi_with_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _geo_query(spark: SparkSession, sf_dir: str, spec: G.GeomSpec, buffer_m: float) -> DataFrame:
     """The engine's prefilter+refine path over the derived view: cell cover
     (equi-IN as ONE parsed expression — Column.isin costs a py4j round-trip
-    per literal) then exact pandas-UDF refinement."""
+    per literal) then the exact native refine."""
     view = D.spark_poi_view(spark, sf_dir)
     cover = C.cover_geometry(spec, buffer_m, _GEO_RES)
     df = view.filter(isin_expr(D.sql_cell("lon", "lat", _GEO_RES), cover.tolist()))

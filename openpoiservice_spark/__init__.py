@@ -9,14 +9,14 @@ single wide table of geotagged image+caption rows:
 
 Architecture (see SURVEY.md for the full blueprint):
   * prefilter/refine spatial joins: quadtree cell-cover equi-prefilter
-    (partition + row-group pruning) followed by exact vectorized
-    point-in-geometry refinement — the Spark-native analogue of the
-    reference's GiST index scan + `_st_dwithin` recheck
+    (partition + row-group pruning) followed by exact point-in-geometry
+    refinement in native Spark SQL expressions — the Spark-native analogue
+    of the reference's GiST index scan + `_st_dwithin` recheck
     (reference misc.sql:50-52).
-  * the import path is pure native Spark expressions (zero Python in the
-    ingest loop); query-time per-row compute is Arrow-vectorized pandas
-    UDFs (never per-row Python), kept off any scan that carries the binary
-    payload column (tiles.filter_payload two-phase selection).
+  * the import path and the request path are native Spark expressions
+    (zero Python in the ingest loop and in the refine/distance); the
+    remaining per-row Python (image decode, batch-join refine, operators)
+    is Arrow-vectorized pandas code, never row-at-a-time Python.
   * driver-side query compilation mirroring the reference's request
     lifecycle (validation, category-group expansion, geometry admission).
 """

@@ -7,7 +7,7 @@ A request dict {"request": "pois"|"stats"|"list", "geometry": {...},
     scan(prepared, pruned columns)
       -> cell-cover prefilter        (partition + row-group pruning; the
                                       GiST-prefilter analogue, misc.sql:50)
-      -> exact refine pandas UDF     (the `_st_dwithin` recheck analogue)
+      -> exact refine, native expr   (the `_st_dwithin` recheck analogue)
       -> category / custom filters   (reference query_builder.py:46-53,142-158)
       -> distance column (quirk Q5)  -> orderBy -> limit(n-1, quirk Q1)
       -> collect -> GeoJSON assembly (reference query_builder.py:211-267)
@@ -160,10 +160,10 @@ class PoiEngine:
     def __init__(self, spark: SparkSession, prepared_dir: str,
                  invalid_log: str | None = None,
                  spheroid_distance: bool = False):
-        """`spheroid_distance=True` computes output distances on the WGS84
-        spheroid (geo.vincenty_m) for exact PostGIS-geography parity; the
-        default haversine differs by < 0.6% (bound asserted in tests) and
-        is what the goldens pin."""
+        """`spheroid_distance=True` computes point-request output distances
+        on the WGS84 spheroid (the Vincenty option and the haversine bound
+        are stated in geo.py); the default haversine is what the goldens
+        pin."""
         self.spark = spark
         self.prepared_dir = prepared_dir
         self.invalid_log = invalid_log
@@ -215,7 +215,7 @@ class PoiEngine:
         """Cell-cover prefilter with size-adaptive join strategy (J7).
         Strategy choice is DENSITY-AWARE: measured per-pcell row counts from
         the lineage table refine the cover on dense regions (fewer
-        false-positive rows reach the exact-refine UDF), which in turn flips
+        false-positive rows reach the exact refine), which in turn flips
         IN-pushdown -> broadcast-hash through the size thresholds."""
         region = cq.refine_spec
         res = cells.pick_cover_res(region, cq.refine_buffer)
@@ -325,6 +325,12 @@ class PoiEngine:
         return _knn.knn(self._df.drop("bytes", "caption"), lon, lat, k,
                         pcell_rows=self._pcell_rows, **kw)
 
+    @staticmethod
+    def _refine(cq: CompiledQuery):
+        """The exact refine predicate, a native Spark expression."""
+        refine = make_refine_udf(cq.refine_spec, cq.refine_buffer, cq.refine_bbox)
+        return refine(F.col("lon"), F.col("lat"))
+
     def _pois_base(self, payload: dict, cq: CompiledQuery | None = None) -> DataFrame:
         """The un-limited POI plan: prefilter -> refine -> filters ->
         distance.  `bytes`/`caption` deliberately absent: the GeoJSON
@@ -337,8 +343,7 @@ class PoiEngine:
             "tags", "category_ids",
         )
         df = self._prefilter(df, cq)
-        refine = make_refine_udf(cq.refine_spec, cq.refine_buffer, cq.refine_bbox)
-        df = df.filter(refine(F.col("lon"), F.col("lat")))
+        df = df.filter(self._refine(cq))
         df = self._apply_filters(df, payload.get("filters"))
         dist = make_distance_udf(cq.distance_spec, spheroid=self.spheroid_distance)
         return df.withColumn("distance", dist(F.col("lon"), F.col("lat")))
@@ -375,7 +380,9 @@ class PoiEngine:
         when empty.  (Coordinate rounding is Spark `round`; it can differ
         from Python's format() only on exact decimal ties at the 7th digit,
         which arbitrary doubles essentially never hit — asserted against
-        the driver assembly in tests.)"""
+        the driver assembly in tests.  `distance` is the executor's native
+        value, which for point geometries may differ from geo.py's in the
+        last bits, < 1e-12 m.)"""
         df = self._pois_base(payload, cq)
         _, _, cat_info, _ = taxonomy.indices()
         entries = []
@@ -481,16 +488,28 @@ class PoiEngine:
 
     def _feature_collection(self, payload: dict, cq: CompiledQuery) -> dict:
         rows = self.pois_df(payload, cq).collect()
+        # the emitted distances come from geo.py, not the executor: the JVM's
+        # sin/cos/asin can differ from numpy's in the last bits (< 1e-12 m);
+        # recomputing the <= limit emitted rows keeps responses bit-stable
+        dists = cq.distance_spec.distance_m(
+            np.array([r.lon for r in rows], dtype=np.float64),
+            np.array([r.lat for r in rows], dtype=np.float64),
+            spheroid=self.spheroid_distance,
+        )
+        order = range(len(rows))
+        if payload.get("sortby") != "category":
+            order = sorted(order, key=lambda i: (dists[i], rows[i].osm_id))
         features, lonlats = [], []
         _, _, cat_info, _ = taxonomy.indices()
-        for r in rows:
+        for i in order:
+            r = rows[i]
             # quirk Q6: 6-decimal string-format truncation
             x, y = truncate6(r.lon), truncate6(r.lat)
             lonlats.append((x, y))
             props = {
                 "osm_id": int(r.osm_id),
                 "osm_type": int(r.osm_type),
-                "distance": float(r.distance),
+                "distance": float(dists[i]),
             }
             cat_obj = {}
             for cid in sorted(set(r.category_ids)):  # Q4: set-dedup
@@ -526,8 +545,7 @@ class PoiEngine:
             cq = compile_geometry(payload["geometry"])[0]
         df = self._df.select("osm_type", "osm_id", "lon", "lat", "cell", "pcell", "category_ids")
         df = self._prefilter(df, cq)
-        refine = make_refine_udf(cq.refine_spec, cq.refine_buffer, cq.refine_bbox)
-        df = df.filter(refine(F.col("lon"), F.col("lat")))
+        df = df.filter(self._refine(cq))
         filters = payload.get("filters") or {}
         category_ids = filters.get("category_ids")
         if filters.get("category_group_ids"):

@@ -29,7 +29,7 @@ SALT_THRESHOLD_ROWS = 2_000_000
 #: density-driven cover refinement: when the lineage stats estimate MORE
 #: rows than this inside a query's cell cover, the planner refines the cover
 #: two resolution levels (16x smaller cells) — a tighter cover sends fewer
-#: false-positive rows through the exact-refine UDF, and the larger cover
+#: false-positive rows through the exact refine, and the larger cover
 #: list flips the join strategy from IN-pushdown to broadcast-hash via the
 #: existing size thresholds.
 DENSE_REFINE_ROWS = 500_000

@@ -1,15 +1,17 @@
-"""Vectorized pandas-UDF surface (SURVEY.md §2.10) + native-column helpers.
+"""Native-column helpers (SURVEY.md §2.10): cell and tile ids, caption
+parsing, and the exact geometry refine and distance.
 
-Every per-row computation in the engine goes through Arrow-batched pandas
-UDFs (BASELINE.json input_hint: "no per-row Python") or stays in native
-Spark column expressions (JVM, whole-stage codegen).  Native expressions are
-preferred wherever the math is closed-form integer/double arithmetic (cell
-ids, tile ids) because they keep the plan inside WholeStageCodegen *and*
-keep the DuckDB oracle bit-identical.
+Per-row math that is closed-form double/integer arithmetic stays in native
+Spark column expressions (JVM; cell and tile ids inside whole-stage codegen,
+which also keeps the DuckDB oracle bit-identical).  The geometry refine and
+distance are native too (see the section below); the one pandas UDF left
+here is the caption-parse reference that the streaming tests compare the
+native parser against, plus the non-default Vincenty distance.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -209,32 +211,175 @@ def parse_caption_udf(caption: pd.Series) -> pd.DataFrame:
     )
 
 
+# ------------------------------------------------- native geometry refine
+#
+# GeomSpec.within_m / distance_m compiled to ONE parsed Spark SQL expression
+# per predicate or distance: the exact recheck after the cell-cover
+# prefilter (reference misc.sql:50-52) runs in the executor JVM, with no
+# Python worker and no Arrow transfer.  Three rules keep it fast and exact:
+#   * one F.expr string per Column (a node-by-node Column tree costs one py4j
+#     round-trip per node — the isin_expr lesson);
+#   * constant expression size: the ring/segment constants travel as ONE
+#     array(named_struct(...)) literal (constant-folded to a single Literal)
+#     folded over with `aggregate`, and the projected point is bound once
+#     through `transform(array(named_struct('x', X, 'y', Y)), p -> ...)[0]`;
+#   * geo.py's arithmetic, operation for operation: constant sub-terms are
+#     precomputed in numpy exactly as geo.py computes them and written as
+#     exact double literals.  The planar kinds (linestring, polygon, bbox)
+#     are bit-identical to geo.py; point haversine uses the JVM's sin/cos/
+#     asin, which can differ from numpy's in the last bits (< 1e-12 m), so
+#     the driver recomputes emitted distances with geo.py (api.py).
+
+
+def _d(x) -> str:
+    """Exact double literal: repr round-trips the value; the D suffix keeps
+    it DOUBLE (a bare 1.5 parses as DECIMAL).  Negatives are parenthesized
+    so `a - -1.0D` can never become a `--` comment."""
+    r = f"{float(x)!r}D"
+    return f"({r})" if r.startswith("-") else r
+
+
+def _col_sql(c: Column) -> str:
+    """SQL text of an input column reference such as F.col("lon") (read
+    from its expression node — one py4j call)."""
+    return c._jc.toString()
+
+
+def _ring_edges(xy: np.ndarray, ring: int, close: bool) -> list[str]:
+    """named_struct literals for the edges of one ring or polyline.
+
+    Segment fields (ax, ay, dx, dy, den) follow geo.dist_to_segments_m over
+    the vertices as given; ray-cast fields (ax, ay, by, dx, rden) follow
+    geo.point_in_ring over the closed ring.  With `close`, a missing closing
+    edge is appended with s=false: it takes part in the ray cast only."""
+    n_seg = len(xy) - 1
+    if close:
+        xy = _geo._closed(xy)
+    a, b = xy[:-1], xy[1:]
+    dx, dy = (b - a)[:, 0], (b - a)[:, 1]
+    l2 = dx * dx + dy * dy
+    den = np.where(l2 > 0.0, l2, 1.0)
+    rden = np.where(dy != 0.0, dy, 1.0)
+    return [
+        f"named_struct('ax', {_d(a[i, 0])}, 'ay', {_d(a[i, 1])}, "
+        f"'by', {_d(b[i, 1])}, 'dx', {_d(dx[i])}, 'dy', {_d(dy[i])}, "
+        f"'den', {_d(den[i])}, 'rden', {_d(rden[i])}, "
+        f"'s', {'true' if i < n_seg else 'false'}, 'r', {ring})"
+        for i in range(len(a))
+    ]
+
+
+_INF = "CAST('Infinity' AS DOUBLE)"
+
+
+def _min_d2(acc: str) -> str:
+    """least(acc, squared planar distance from point p to segment e), as
+    geo.dist_to_segments_m computes it: clamped projection parameter t,
+    closest point c = a + t*d, |p - c|^2.  t is bound once per edge by an
+    inner one-element `aggregate` whose start value is the running min."""
+    t = "least(greatest(((p.x - e.ax) * e.dx + (p.y - e.ay) * e.dy) / e.den, 0D), 1D)"
+    d2 = ("(p.x - (e.ax + t * e.dx)) * (p.x - (e.ax + t * e.dx)) + "
+          "(p.y - (e.ay + t * e.dy)) * (p.y - (e.ay + t * e.dy))")
+    return f"aggregate(array({t}), {acc}, (q, t) -> least(q, {d2}))"
+
+
+# the horizontal ray from p crosses edge e (geo.point_in_ring)
+_CROSS = "((e.ay > p.y) != (e.by > p.y) AND p.x < e.ax + (p.y - e.ay) * e.dx / e.rden)"
+
+
+def _project_sql(spec: "_geo.GeomSpec", lon: str, lat: str) -> tuple[str, str]:
+    """geo.local_xy(lon, lat, spec.lon0, spec.lat0) as SQL, antimeridian
+    wrap included (np.mod's sign rule spelled out: `%` is C fmod)."""
+    m = _geo.M_PER_DEG_LAT
+    dl = f"({lon} - {_d(spec.lon0)})"
+    r = f"(({dl} + 180D) % 360D)"
+    wrapped = f"IF(abs({dl}) > 180D, IF({r} < 0D, {r} + 360D, {r}) - 180D, {dl})"
+    x = f"{wrapped} * {_d(m)} * {_d(np.cos(np.radians(spec.lat0)))}"
+    y = f"({lat} - {_d(spec.lat0)}) * {_d(m)}"
+    return x, y
+
+
+def _haversine_sql(spec: "_geo.GeomSpec", lon: str, lat: str) -> str:
+    """geo.haversine_m(lon, lat, *spec.coords[0]) as SQL; the query point's
+    terms are precomputed by the same numpy calls geo.py makes."""
+    k = _d(np.pi / 180.0)  # np.radians multiplies by this constant
+    lon2, lat2 = (np.asarray(v, dtype=np.float64) for v in spec.coords[0])
+    rl2 = np.radians(lat2)
+    rl1 = f"({lat} * {k})"
+    s1 = f"sin(({_d(rl2)} - {rl1}) / 2D)"
+    s2 = f"sin(({_d(np.radians(lon2))} - {lon} * {k}) / 2D)"
+    a = f"{s1} * {s1} + cos({rl1}) * {_d(np.cos(rl2))} * ({s2} * {s2})"
+    return f"{_d(2.0 * _geo.EARTH_RADIUS_M)} * asin(least(1D, sqrt({a})))"
+
+
+def _distance_sql(spec: "_geo.GeomSpec", lon: str, lat: str) -> str:
+    """GeomSpec.distance_m (spheroid=False) as one SQL expression."""
+    if spec.kind == "point":
+        return _haversine_sql(spec, lon, lat)
+    if spec.kind == "linestring":
+        edges = _ring_edges(spec._xy, 0, close=False)
+        body = f"sqrt(aggregate(array({', '.join(edges)}), {_INF}, (m, e) -> {_min_d2('m')}))"
+    elif spec.kind == "polygon":
+        # outer ring first, then the holes: min squared distance over every
+        # segment; even-odd parity per ring, folded ring by ring (inside =
+        # odd parity on ring 0 and even parity on every hole)
+        edges = _ring_edges(spec._xy, 0, close=True)
+        for i, hxy in enumerate(spec._holes_xy, start=1):
+            edges += _ring_edges(hxy, i, close=True)
+        ring_ok = "(a.r = 0) = a.c"
+        body = (
+            f"aggregate(array({', '.join(edges)}), "
+            f"named_struct('d2', {_INF}, 'r', 0, 'c', false, 'ok', true), "
+            f"(a, e) -> named_struct("
+            f"'d2', IF(e.s, {_min_d2('a.d2')}, a.d2), 'r', e.r, "
+            f"'c', IF(e.r = a.r, a.c, false) != {_CROSS}, "
+            f"'ok', a.ok AND (e.r = a.r OR {ring_ok})), "
+            f"a -> IF(a.ok AND {ring_ok}, 0D, sqrt(a.d2)))"
+        )
+    else:
+        raise ValueError(f"unknown geometry kind: {spec.kind}")
+    x, y = _project_sql(spec, lon, lat)
+    return f"transform(array(named_struct('x', {x}, 'y', {y})), p -> {body})[0]"
+
+
 def make_refine_udf(spec: "_geo.GeomSpec", buffer_m: float,
                     bbox: "_geo.GeomSpec | None" = None):
     """Exact spatial refine: ST_DWithin(buffered geom [∩ bbox], point, 0)
-    (reference query_builder.py:119-138).  The compiled GeomSpec is captured
-    in the closure and shipped once per task (plain-numpy object, cheap
-    pickle) — the Spark analogue of PostGIS's recheck after the GiST
-    prefilter (reference misc.sql:50-52)."""
+    (reference query_builder.py:119-138), i.e. GeomSpec.within_m.
 
-    @F.pandas_udf(T.BooleanType())
-    def refine(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        ok = spec.within_m(lon.to_numpy(), lat.to_numpy(), buffer_m)
+    Returns a callable (lon, lat) -> boolean Column: one native Spark SQL
+    expression, no Python worker.  The name and call shape are kept from
+    the former pandas UDF so bench.py, __spark_entry__.py and perfbench
+    call it unchanged."""
+
+    def refine(lon, lat) -> Column:
+        lon, lat = _col_sql(lon), _col_sql(lat)
+        sql = f"{_distance_sql(spec, lon, lat)} <= {_d(buffer_m)}"
         if bbox is not None:
-            ok = ok & bbox.within_m(lon.to_numpy(), lat.to_numpy(), 0.0)
-        return pd.Series(ok)
+            sql = f"({sql}) AND {_distance_sql(bbox, lon, lat)} <= 0D"
+        return F.expr(sql)
 
     return refine
 
 
 def make_distance_udf(spec: "_geo.GeomSpec", spheroid: bool = False):
     """Geodesic meters to the query geometry (reference ST_Distance at
-    query_builder.py:98; which geometry per quirk Q5 is the caller's job).
-    `spheroid=True` computes WGS84 Vincenty for point geometries —
-    PostGIS-geography-exact output distances (geo.vincenty_m)."""
+    query_builder.py:98; which geometry per quirk Q5 is the caller's job),
+    i.e. GeomSpec.distance_m.
 
-    @F.pandas_udf(T.DoubleType())
-    def distance(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(spec.distance_m(lon.to_numpy(), lat.to_numpy(), spheroid=spheroid))
+    Returns a callable (lon, lat) -> double Column, a native expression; the
+    name is kept for bench.py and __spark_entry__.py.  `spheroid=True` on a
+    point geometry keeps the Arrow pandas UDF over geo.vincenty_m (see
+    geo.py for the option and the haversine bound); other kinds ignore the
+    flag, as GeomSpec.distance_m does."""
+    if spheroid and spec.kind == "point":
+        @F.pandas_udf(T.DoubleType())
+        def vincenty(lon: pd.Series, lat: pd.Series) -> pd.Series:
+            return pd.Series(spec.distance_m(lon.to_numpy(), lat.to_numpy(), spheroid=True))
+
+        return vincenty
+
+    def distance(lon, lat) -> Column:
+        return F.expr(_distance_sql(spec, _col_sql(lon), _col_sql(lat)))
 
     return distance

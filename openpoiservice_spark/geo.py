@@ -4,7 +4,8 @@ The reference delegates spatial predicates to PostGIS geography functions
 (`ST_DWithin`/`ST_Buffer`/`ST_Distance`, reference
 openpoiservice/server/api/query_builder.py:86,98,119-138).  PostGIS geography
 measures meters on the WGS84 spheroid.  This module re-implements the needed
-subset in pure numpy so it can run inside Arrow-vectorized pandas UDFs:
+subset in pure numpy; functions.make_refine_udf / make_distance_udf compile
+the same arithmetic, operation for operation, into native Spark SQL:
 
   * point-to-point distance: haversine on the IUGG mean-radius sphere
     (deviation from spheroidal geodesics < 0.6%%, asserted over the admitted
@@ -12,7 +13,9 @@ subset in pure numpy so it can run inside Arrow-vectorized pandas UDFs:
     guaranteed by the fixture synthesizer, which keeps every test point
     >= 1.5 m away from any decision boundary; see FIXTURES.md §4).  For
     PostGIS-geography-EXACT output distances, `vincenty_m` implements the
-    WGS84 spheroidal inverse (make_distance_udf(spec, spheroid=True)).
+    WGS84 spheroidal inverse (make_distance_udf(spec, spheroid=True), an
+    Arrow pandas UDF; PoiEngine(spheroid_distance=True)).  This is the one
+    statement of the bound and of the option; other docstrings refer here.
   * point-to-linestring / point-to-polygon distance: planar math in a local
     equirectangular projection centred on the query geometry (error << 1 m
     at the <= 2 km extents admitted by the reference's own request caps,
@@ -21,8 +24,9 @@ subset in pure numpy so it can run inside Arrow-vectorized pandas UDFs:
     points at once — N points x M edges as one numpy broadcast.
 
 Everything here is deliberately free of Spark imports: the functions take and
-return numpy arrays so they are unit-testable without a JVM and reusable both
-in pandas UDFs and in the driver-side brute-force oracle used by the tests.
+return numpy arrays so they are unit-testable without a JVM and reusable in
+the batch-join pandas UDFs, the driver's distance recompute and the
+brute-force oracle used by the tests.
 """
 
 from __future__ import annotations
@@ -60,8 +64,7 @@ def vincenty_m(lon1, lat1, lon2, lat2, iters: int = 50, tol: float = 1e-12):
     published iteration; entries that fail to converge within `iters`
     (near-antipodal pairs, ~0.002% of the sphere — never reachable through
     the service's 2 km-buffer / 50 km²-area request caps) fall back to
-    haversine, whose error is bounded by the flattening (< 0.6%,
-    asserted in tests/test_kernels.py::test_haversine_vs_spheroid_bound).
+    haversine (bound in the module docstring).
     """
     lon1, lat1, lon2, lat2 = (
         np.atleast_1d(np.asarray(x, dtype=np.float64)) for x in (lon1, lat1, lon2, lat2)
@@ -270,11 +273,8 @@ class GeomSpec:
 
         Matches PostGIS ST_Distance semantics: 0 inside a polygon, geodesic
         meters otherwise (reference query_builder.py:86,98).  Point geometry
-        uses exact haversine (`spheroid=True` switches to WGS84 Vincenty for
-        PostGIS-exact output); extended geometry uses the local plane, whose
-        spheroidal correction is second-order at the <= 2 km buffer /
-        <= 500 km linestring extents the request caps admit (bound asserted
-        in tests/test_kernels.py::test_haversine_vs_spheroid_bound).
+        uses haversine (`spheroid=True`: WGS84 Vincenty; see the module
+        docstring); extended geometry uses the local plane.
         """
         lon = np.asarray(lon, dtype=np.float64)
         lat = np.asarray(lat, dtype=np.float64)

@@ -440,10 +440,14 @@ def _np_dot_lr(E: np.ndarray, Q: np.ndarray) -> np.ndarray:
     `_dot` (aggregate over zip_with), so the raw values are bit-identical
     to what the former join-side expression produced.  np.dot/np.matmul
     would be faster but use pairwise/SIMD summation whose last bits differ;
-    here correctness (hash-stable cosines) beats the constant factor."""
+    here correctness (hash-stable cosines) beats the constant factor.
+    Each dimension's products land in one reused scratch buffer, so the
+    loop allocates two (ne, nq) arrays in total, not one per dimension."""
     acc = np.zeros((E.shape[0], Q.shape[0]), dtype=np.float64)
+    prod = np.empty_like(acc)
     for d in range(E.shape[1]):
-        acc += E[:, d, None] * Q[None, :, d]
+        np.multiply(E[:, d, None], Q[None, :, d], out=prod)
+        acc += prod
     return acc
 
 
@@ -478,15 +482,23 @@ _TOPK_EPS = 2e-6
 
 def _emit_partial_topk(out: list, k: int):
     """(query_id, vec_id, cosine_raw) triples -> per-query partial top-k
-    with the `_TOPK_EPS` margin, as one pandas frame."""
+    with the `_TOPK_EPS` margin, as one pandas frame.
+
+    The k-th value is taken over the finite cosines only; NaN rows (a
+    zero-norm vector) pass through unchanged to the JVM ranking, so they
+    can never push a partition's valid rows out."""
     import pandas as pd
 
     df = pd.concat(out, ignore_index=True) if len(out) > 1 else out[0]
     df = df.sort_values(["query_id", "cosine_raw"],
                         ascending=[True, False], kind="mergesort")
-    kth = (df.groupby("query_id", sort=False)["cosine_raw"]
+    raw = df["cosine_raw"].to_numpy()
+    keep = ~np.isfinite(raw)
+    fin = ~keep
+    kth = (df[fin].groupby("query_id", sort=False)["cosine_raw"]
            .transform(lambda s: s.iloc[min(k, len(s)) - 1]))
-    return df[df["cosine_raw"].to_numpy() >= kth.to_numpy() - _TOPK_EPS]
+    keep[fin] = raw[fin] >= kth.to_numpy() - _TOPK_EPS
+    return df[keep]
 
 
 def _np_candidates_fn(q_ids: np.ndarray, Qm: np.ndarray, Qn: np.ndarray,

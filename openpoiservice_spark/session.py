@@ -1,9 +1,9 @@
 """SparkSession factory with the engine's required configuration.
 
 All defaults target the 100 TB design point scaled to local mode: AQE on
-(runtime re-plan + skew-join splitting), Arrow on (every per-row computation
-in this engine rides pandas UDFs), partition sizing that keeps scan tasks in
-the 128 MB range.
+(runtime re-plan + skew-join splitting), Arrow on (the per-row Python
+stages — image decode, batch-join refine, operators — ride Arrow batches),
+partition sizing that keeps scan tasks in the 128 MB range.
 """
 
 from __future__ import annotations

@@ -109,32 +109,17 @@ _PIX_SCHEMA = T.StructType(
 def filter_payload(pois: DataFrame, meta_filter,
                    payload_cols=("image_id", "bytes", "fmt", "lon", "lat", "w", "h"),
                    key: str = "image_id", payload_prefilter=None) -> DataFrame:
-    """Two-phase payload selection — the engine's TOAST analogue.
+    """Select the payload rows that pass `meta_filter` in ONE scan.
 
-    A Python-backed row filter (the Arrow refine UDF) placed on a scan that
-    carries the binary column forces EVERY candidate row's payload through
-    the plan around the ArrowEvalPython stage: measured 23-38 s vs 6 s for a
-    plain full scan of the same bytes at sf0.1 (the payload is 95% of the
-    row).  Instead:
-
-      phase 1: evaluate `meta_filter` on a payload-FREE projection (cheap:
-               narrow columns, pushdown intact, Python sees only lon/lat);
-      phase 2: broadcast the matched keys onto a JVM-only scan of the
-               payload columns — bytes meet nothing but an InSet/hash-join
-               probe until they cross Arrow ONCE into the decode operator.
-
-    `meta_filter`: callable(df_without_payload) -> filtered DataFrame; must
-    keep `key`.  `payload_prefilter`: optional callable applied to the
-    payload-side scan for JVM-only pruning predicates (pcell partition
-    filter, pushed cell ranges).  Bench effect: corridor_pixels
-    23-38 s -> 4.5-10 s.
-    """
-    narrow = pois.drop("bytes")
-    keys = meta_filter(narrow).select(key)
-    payload = pois
+    `meta_filter`: callable(df) -> filtered DataFrame (the cover prefilter
+    plus the native refine); `payload_prefilter`: optional callable for
+    extra JVM pruning predicates (pcell partition filter, pushed lon/lat
+    ranges).  Every predicate is a native expression, so `bytes` meets
+    only JVM filters until it crosses Arrow once into the decode operator.
+    `key` is unused; it stays for callers that pass it."""
     if payload_prefilter is not None:
-        payload = payload_prefilter(payload)
-    return payload.select(*payload_cols).join(F.broadcast(keys), key)
+        pois = payload_prefilter(pois)
+    return meta_filter(pois).select(*payload_cols)
 
 
 def tile_pixel_stats(df: DataFrame, z: int, on_error: str = "fail") -> DataFrame:

@@ -297,3 +297,38 @@ def test_append_ivfpq_table_parity_and_idempotence(spark, emb, tmp_path):
         .write.partitionBy("ivf_cell").parquet(missing)
     with pytest.raises(ValueError, match="sidecar"):
         ANN.append_ivfpq_table(spark, missing, emb.limit(5))
+
+
+def test_partial_topk_keeps_valid_rows_beside_nan():
+    """NaN cosines (zero-norm vectors) never decide the k-th value: with
+    2 valid and 3 NaN rows and k=4, both valid rows survive, and the NaN
+    rows pass through to the JVM ranking."""
+    import numpy as np
+    import pandas as pd
+
+    part = pd.DataFrame({"query_id": [7] * 5, "vec_id": [1, 2, 3, 4, 5],
+                         "cosine_raw": [np.nan, 0.5, np.nan, 0.9, np.nan]})
+    out = ANN._emit_partial_topk([part], k=4)
+    assert sorted(out["vec_id"].tolist()) == [1, 2, 3, 4, 5]
+    fin = out[np.isfinite(out["cosine_raw"])]
+    assert fin["vec_id"].tolist() == [4, 2]
+
+    # per query: the k-th finite value still prunes
+    two = pd.DataFrame({"query_id": [1, 1, 1, 2, 2], "vec_id": [1, 2, 3, 4, 5],
+                        "cosine_raw": [0.1, 0.8, 0.5, np.nan, 0.3]})
+    kept = ANN._emit_partial_topk([two], k=1)
+    assert sorted(kept["vec_id"].tolist()) == [2, 4, 5]
+
+
+def test_np_dot_lr_bit_identical_to_per_dimension_loop():
+    """The scratch-buffer dot keeps the same left-to-right adds as one
+    fresh product array per dimension."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    E = rng.standard_normal((257, 64))
+    Q = rng.standard_normal((31, 64))
+    ref = np.zeros((257, 31))
+    for d in range(64):
+        ref += E[:, d, None] * Q[None, :, d]
+    assert np.array_equal(ANN._np_dot_lr(E, Q), ref)

@@ -68,17 +68,74 @@ def test_small_cover_join_broadcasts(spark, fixture_paths):
     assert "BroadcastHashJoin" in plan
 
 
-def test_refine_is_arrow_vectorized(spark, fixture_paths, engine):
-    """The exact refine runs as an Arrow-batched pandas UDF (ArrowEvalPython),
-    never row-at-a-time Python (BatchEvalPython)."""
-    payload = {
-        "request": "pois",
-        "geometry": {"geojson": {"type": "Point",
-                                 "coordinates": [8.8075, 53.0753]}, "buffer": 50},
-    }
-    plan = _plan(engine.pois_df(payload))
-    assert "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan
+_PYTHON_STAGES = ("ArrowEvalPython", "BatchEvalPython", "PythonUDF",
+                  "MapInPandas", "MapInArrow")
+
+
+def _has_python(plan: str) -> bool:
+    return any(stage in plan for stage in _PYTHON_STAGES)
+
+
+def test_request_plans_have_no_python_stage(spark, fixture_paths, engine):
+    """The default pois_df and stats_df plans run the exact refine and the
+    distance as native expressions: no Python stage at all, so no
+    row-at-a-time Python either."""
+    from openpoiservice_spark import fixtures
+
+    geometries = [
+        {"geojson": {"type": "Point", "coordinates": [8.8075, 53.0753]}, "buffer": 50},
+        {"geojson": {"type": "LineString", "coordinates": fixtures.LINESTRING}, "buffer": 10},
+        {"geojson": {"type": "Polygon", "coordinates": [fixtures.POLYGON]}, "buffer": 0},
+        {"bbox": [[8.807054, 53.075024], [8.807533, 53.075363]], "buffer": 20},
+    ]
+    for geometry in geometries:
+        for build in (engine.pois_df, engine.stats_df):
+            plan = _plan(build({"request": "pois", "geometry": geometry}))
+            assert not _has_python(plan), (geometry, plan)
+
+
+def _ring(n: int, lon0: float, lat0: float, r_deg: float) -> list:
+    th = np.linspace(0.0, 2.0 * np.pi, n + 1)[:-1]
+    pts = [[lon0 + r_deg * np.cos(t), lat0 + 0.6 * r_deg * np.sin(t)] for t in th]
+    return pts + [pts[0]]
+
+
+def test_many_vertex_refine_is_one_edge_literal(spark, engine):
+    """A 1,000-vertex linestring and a 1,000-vertex polygon request return
+    the numpy oracle's rows, and the optimized plan carries the vertices as
+    ONE constant-folded edge-array literal, not one expression per edge."""
+    from openpoiservice_spark import fixtures
+    from openpoiservice_spark.api import compile_geometry
+
+    def shape(plan: str) -> tuple:
+        return tuple(plan.count(node) for node in
+                     ("named_struct(", "aggregate(", "lambdafunction(", "transform("))
+
+    lon0, lat0 = fixtures.POINT_P
+    df = engine._df.select("osm_id", "lon", "lat").toPandas()
+    for geometry, small in (
+        ({"geojson": {"type": "LineString", "coordinates": _ring(1000, lon0, lat0, 0.003)[:-1]},
+          "buffer": 40},
+         {"geojson": {"type": "LineString", "coordinates": _ring(5, lon0, lat0, 0.003)[:-1]},
+          "buffer": 40}),
+        ({"geojson": {"type": "Polygon", "coordinates": [_ring(1000, lon0, lat0, 0.004)]}},
+         {"geojson": {"type": "Polygon", "coordinates": [_ring(5, lon0, lat0, 0.004)]}}),
+    ):
+        payload = {"request": "pois", "geometry": geometry, "limit": 1}
+        cq = compile_geometry(geometry)[0]
+        n_vert = len(cq.refine_spec.coords)
+        assert n_vert >= 1000
+        q = engine.pois_df(payload)
+        got = sorted(r.osm_id for r in q.collect())
+        keep = cq.refine_spec.within_m(df["lon"].to_numpy(), df["lat"].to_numpy(),
+                                       cq.refine_buffer)
+        assert got == sorted(df["osm_id"][keep].tolist()) and got
+        plan = _optimized(q)
+        # the refine and the distance column each fold over ONE edge
+        # literal, and the expression is the same size as for 5 vertices
+        assert plan.count("aggregate([[") == 2
+        assert shape(plan) == shape(_optimized(engine.pois_df(
+            {"request": "pois", "geometry": small, "limit": 1})))
 
 
 def test_stats_partial_aggregation(spark, fixture_paths, engine):
@@ -131,11 +188,10 @@ def test_density_stats_flip_cover_strategy(spark, fixture_paths):
     assert a == b and a
 
 
-def test_filter_payload_two_phase(spark, fixture_paths):
-    """tiles.filter_payload: identical rows to the direct single-phase
-    filter, with the Python refine stage on the payload-FREE side only —
-    bytes meet nothing but the broadcast-join probe (one ArrowEvalPython in
-    the whole plan, on the meta branch)."""
+def test_filter_payload_single_scan(spark, fixture_paths):
+    """tiles.filter_payload: identical rows to the direct filter, in one
+    scan with no Python stage anywhere in the plan — `bytes` meets only
+    native filters."""
     from openpoiservice_spark import fixtures, geo, tiles
     from openpoiservice_spark.functions import make_refine_udf
 
@@ -145,15 +201,15 @@ def test_filter_payload_two_phase(spark, fixture_paths):
     pred = lambda d: d.filter(refine(F.col("lon"), F.col("lat")))  # noqa: E731
 
     direct = pred(df).select("image_id", "bytes")
-    two = tiles.filter_payload(df, pred)
-    a = {r.image_id for r in direct.collect()}
-    b = {(r.image_id, r.bytes is not None) for r in two.collect()}
-    assert {x[0] for x in b} == a and a
-    assert all(x[1] for x in b)  # payload came through
+    one = tiles.filter_payload(df, pred)
+    a = {(r.image_id, r.bytes) for r in direct.collect()}
+    b = {(r.image_id, r.bytes) for r in one.collect()}
+    assert a == b and a
+    assert all(x[1] is not None for x in b)  # payload came through
 
-    plan = _plan(two).split("== Initial Plan ==")[0]  # AQE repeats the tree
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("ArrowEvalPython") == 1  # refine on the meta side only
+    plan = _plan(one)
+    assert not _has_python(plan)
+    assert plan.split("== Initial Plan ==")[0].count("FileScan") == 1
 
 
 def test_lonlat_range_reaches_parquet_scan(spark, fixture_paths):
