@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..topk import partial_topk, rank_topk
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Higher-order-function dot (dimension-agnostic).  Measured FASTER
@@ -78,7 +80,7 @@ def query_vector(dim: int = 64, seed: int = 7) -> np.ndarray:
 def cosine_col(vec_col: Column, qvec) -> Column:
     q = _qvec_lit(qvec)
     qn = float(np.linalg.norm(np.asarray(qvec, dtype=np.float64)))
-    return _dot(vec_col, q) / (_norm(vec_col) * F.lit(qn))
+    return F.try_divide(_dot(vec_col, q), _norm(vec_col) * F.lit(qn))
 
 
 def brute_topk(emb: DataFrame, qvec, k: int = 10) -> DataFrame:
@@ -100,10 +102,10 @@ def hyperplanes(n_planes: int = 8, dim: int = 64, seed: int = 13) -> np.ndarray:
 
 def auto_planes(n_rows: int, target_bucket: int = 1024, max_planes: int = 30) -> int:
     """Size-aware hyperplane count: the smallest P with expected bucket size
-    n_rows / 2^P <= target_bucket (round-3 verdict item 2 — a FIXED P is
-    quadratic-by-construction at 10^12 rows: 8 planes = 256 buckets =
-    ~4x10^9 rows/bucket).  Mirrors the auto band pick the hamming pipeline
-    already does (operators/images.pick_bands).  Capped at `max_planes`
+    n_rows / 2^P <= target_bucket (a FIXED P is quadratic by construction
+    at 10^12 rows: 8 planes = 256 buckets = ~4x10^9 rows/bucket).  Mirrors
+    the auto band pick the hamming pipeline already does
+    (operators/images.pick_bands).  Capped at `max_planes`
     (2^30 buckets ~ 10^9; beyond that bucket-count growth stops paying for
     the extra dot products per row — split the table instead)."""
     import math
@@ -207,7 +209,7 @@ def ivf_assign_col(vec_col: Column, centroids: np.ndarray) -> Column:
     is transform + array_max + array_position: expression depth stays O(1)
     in the codebook size, so a production codebook (C=256..4096) compiles
     in constant plan depth instead of the C-deep nested-WHEN chain that
-    blows up Catalyst at C>=256 (round-2 verdict item 4)."""
+    blows up Catalyst at C>=256."""
     cb = F.array(*[_qvec_lit(c) for c in centroids])
     dots = F.transform(cb, lambda c: _dot(vec_col, c))
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
@@ -363,62 +365,47 @@ def ivf_topk_table(spark, path: str, qvec, k: int = 10,
 
 # --------------------------------------------------------- batch top-k
 
-def _local_topk_fn(k: int, prune_at: int = 65536):
-    """Per-partition partial top-k over (query_id, vec_id, cosine)
-    candidates: keeps only each query's k best seen in this partition, so
-    the query_id shuffle that follows carries <= k rows per (partition,
-    query) instead of every candidate pair — the same partial-aggregable
-    heap stage batchjoin._knn_local_topk_fn gives the geo kNN."""
-    import pandas as pd
+#: slack on the per-task partial top-k, whose scores are RAW cosines while
+#: the final rank runs on the JVM-rounded cosine: a row can only displace a
+#: kept one if its raw cosine is within 1e-6 of the k-th best (F.round(x, 6)
+#: moves a value < 5e-7), so keeping everything within 2e-6 of the k-th raw
+#: guarantees the global rounded-rank top-k is a subset of the partials —
+#: F.round in `_rank` stays the single rounding authority.
+_TOPK_EPS = 2e-6
 
-    def prune(buf):
-        df = pd.concat(buf, ignore_index=True)
-        df = df.sort_values(["query_id", "neg_cos", "vec_id"], kind="mergesort")
-        return [df.groupby("query_id", sort=False).head(k)]
-
-    def run(batches):
-        buf, n_buf = [], 0
-        for b in batches:
-            if not len(b):
-                continue
-            buf.append(b.assign(neg_cos=-b["cosine"]))
-            n_buf += len(b)
-            if n_buf > prune_at:
-                buf = prune(buf)
-                n_buf = len(buf[0])
-        if buf:
-            yield prune(buf)[0][["query_id", "vec_id", "cosine"]]
-
-    return run
+_PARTIAL_SCHEMA = "query_id long, vec_id long, neg_cos double"
 
 
-_TOPK_SCHEMA = "query_id long, vec_id long, cosine double"
+def _rank(partials: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, neg_cos) partials -> exact top-k per query:
+    rounded cosine descending (NULL last), vec_id tie-break — the oracle's
+    order."""
+    return rank_topk(
+        partials.select("query_id", "vec_id",
+                        F.round(-F.col("neg_cos"), 6).alias("cosine")),
+        k, [F.desc("cosine"), "vec_id"])
 
 
-def _topk_per_query(cand: DataFrame, k: int) -> DataFrame:
-    """(query_id, vec_id, cosine) candidates -> exact top-k per query:
-    per-partition partial top-k (Arrow pass, no shuffle) then one
-    row_number window over the reduced set.  Deterministic: ranked on the
-    ROUNDED cosine with vec_id tie-break (the oracle ranks identically)."""
-    from pyspark.sql import Window
-
-    local = cand.mapInPandas(_local_topk_fn(k), schema=_TOPK_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, neg_cos) JVM candidates -> exact top-k per query."""
+    partials = cand.mapInPandas(
+        lambda frames: partial_topk(frames, k, "neg_cos", "vec_id",
+                                    _TOPK_EPS),
+        schema=_PARTIAL_SCHEMA)
+    return _rank(partials, k)
 
 
 def _cand_cols() -> list[Column]:
-    """Per-candidate cosine from the pair dot and the PRE-COMPUTED per-side
-    norms (`_en`/`_qn` — each vector's norm evaluated once per row instead
-    of once per pair; 2/3 of the per-pair arithmetic removed).  The rounded
-    value is bit-identical to dot/(norm_e*norm_q) computed inline, which is
-    what the oracle SQL evaluates."""
+    """Per-candidate negated raw cosine from the pair dot and the
+    PRE-COMPUTED per-side norms (`_en`/`_qn` — each vector's norm evaluated
+    once per row instead of once per pair).  Bit-identical to
+    dot/(norm_e*norm_q) computed inline, which is what the oracle SQL
+    evaluates; a zero norm gives NULL."""
     return [
         F.col("q.query_id"),
         F.col("e.vec_id"),
-        F.round(_dot(F.col("e.embedding"), F.col("q.qvec"))
-                / (F.col("e._en") * F.col("q._qn")), 6).alias("cosine"),
+        (-F.try_divide(_dot(F.col("e.embedding"), F.col("q.qvec")),
+                       F.col("e._en") * F.col("q._qn"))).alias("neg_cos"),
     ]
 
 
@@ -471,36 +458,6 @@ def _np_buckets(E: np.ndarray, planes: np.ndarray) -> np.ndarray:
     return out
 
 
-#: slack on the per-partition partial top-k when ranking later happens on the
-#: JVM-rounded cosine: a row can only displace a kept one if its raw cosine
-#: is within 1e-6 of the k-th best (F.round(x, 6) moves a value < 5e-7), so
-#: keeping everything within 2e-6 of the k-th raw guarantees the global
-#: rounded-rank top-k is a subset of the partials — no rounding re-implement
-#: needed in Python, F.round stays the single rounding authority.
-_TOPK_EPS = 2e-6
-
-
-def _emit_partial_topk(out: list, k: int):
-    """(query_id, vec_id, cosine_raw) triples -> per-query partial top-k
-    with the `_TOPK_EPS` margin, as one pandas frame.
-
-    The k-th value is taken over the finite cosines only; NaN rows (a
-    zero-norm vector) pass through unchanged to the JVM ranking, so they
-    can never push a partition's valid rows out."""
-    import pandas as pd
-
-    df = pd.concat(out, ignore_index=True) if len(out) > 1 else out[0]
-    df = df.sort_values(["query_id", "cosine_raw"],
-                        ascending=[True, False], kind="mergesort")
-    raw = df["cosine_raw"].to_numpy()
-    keep = ~np.isfinite(raw)
-    fin = ~keep
-    kth = (df[fin].groupby("query_id", sort=False)["cosine_raw"]
-           .transform(lambda s: s.iloc[min(k, len(s)) - 1]))
-    keep[fin] = raw[fin] >= kth.to_numpy() - _TOPK_EPS
-    return df[keep]
-
-
 def _np_candidates_fn(q_ids: np.ndarray, Qm: np.ndarray, Qn: np.ndarray,
                       probe_of: dict | None, planes: np.ndarray | None,
                       k: int):
@@ -511,11 +468,12 @@ def _np_candidates_fn(q_ids: np.ndarray, Qm: np.ndarray, Qn: np.ndarray,
     rows ever crosses Arrow (guide §4.2/§8: decide with small rows — the
     candidate pairing needs only bucket ids — and let the heavy per-pair
     math ride a vectorized kernel).  probe_of=None means brute: every query
-    is a candidate for every row."""
+    is a candidate for every row.  Each (batch, bucket) candidate block goes
+    straight into the shared partial top-k, so a task never holds more than
+    `partial_topk`'s bound."""
     import pandas as pd
 
-    def run(batches):
-        out = []
+    def frames(batches):
         for b in batches:
             if not len(b):
                 continue
@@ -534,17 +492,21 @@ def _np_candidates_fn(q_ids: np.ndarray, Qm: np.ndarray, Qn: np.ndarray,
             for eidx, qidx in groups:
                 if not len(eidx) or not len(qidx):
                     continue
-                dots = _np_dot_lr(E[eidx], Qm[qidx])
-                cos = dots / (en[eidx, None] * Qn[None, qidx])
-                ne, nq = cos.shape
-                out.append(pd.DataFrame({
-                    "query_id": np.repeat(q_ids[qidx][None, :], ne, 0).ravel(),
+                neg = _np_dot_lr(E[eidx], Qm[qidx])
+                # 0/0 for a zero-norm vector: NaN, which Arrow returns as NULL
+                with np.errstate(invalid="ignore"):
+                    np.divide(neg, en[eidx, None] * Qn[None, qidx], out=neg)
+                np.negative(neg, out=neg)
+                ne, nq = neg.shape
+                yield pd.DataFrame({
+                    "query_id": np.tile(q_ids[qidx], ne),
                     "vec_id": np.repeat(vid[eidx], nq),
-                    "cosine_raw": cos.ravel(),
-                }))
-        if out:
-            yield _emit_partial_topk(out, k)[
-                ["query_id", "vec_id", "cosine_raw"]]
+                    "neg_cos": neg.ravel(),
+                })
+
+    def run(batches):
+        return partial_topk(frames(batches), k, "neg_cos", "vec_id",
+                            _TOPK_EPS)
 
     return run
 
@@ -560,21 +522,6 @@ def _collect_queries(queries: DataFrame, query_id: str, qvec_col: str):
     q_ids = pdf["query_id"].to_numpy(np.int64)
     Qm = np.array(pdf["qvec"].tolist(), dtype=np.float64)
     return q_ids, Qm, _np_norm_lr(Qm)
-
-
-def _topk_from_raw(cand_raw: DataFrame, k: int) -> DataFrame:
-    """(query_id, vec_id, cosine_raw) partials -> exact top-k per query:
-    F.round in the JVM (the single rounding authority — ranking semantics
-    identical to `_topk_per_query`) + one row_number window over the <= ~k
-    rows per (partition, query) the Arrow pass emitted."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
-    return (cand_raw
-            .select("query_id", "vec_id",
-                    F.round(F.col("cosine_raw"), 6).alias("cosine"))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
 
 
 def _batch_topk_arrow(emb: DataFrame, queries: DataFrame, k: int,
@@ -594,10 +541,10 @@ def _batch_topk_arrow(emb: DataFrame, queries: DataFrame, k: int,
         probe_of = {b: np.asarray(ix, dtype=np.int64)
                     for b, ix in probe_of.items()}
         planes = np.asarray(planes, dtype=np.float64)
-    cand = _spread(emb).select("vec_id", "embedding").mapInPandas(
+    partials = _spread(emb).select("vec_id", "embedding").mapInPandas(
         _np_candidates_fn(q_ids, Qm, Qn, probe_of, planes, k),
-        schema="query_id long, vec_id long, cosine_raw double")
-    return _topk_from_raw(cand, k)
+        schema=_PARTIAL_SCHEMA)
+    return _rank(partials, k)
 
 
 def _fill_underfilled(emb: DataFrame, q: DataFrame, topk: DataFrame,
@@ -631,26 +578,18 @@ def batch_topk_brute(emb: DataFrame, queries: DataFrame, k: int = 10,
                      query_id: str = "query_id",
                      qvec_col: str = "qvec") -> DataFrame:
     """EXACT top-k for each of N query vectors in ONE job — the batch
-    baseline (round-5 verdict item 2: the embedding analogue of
-    batchjoin.batch_knn; the reference's per-request ORDER BY distance +
-    LIMIT path, reference openpoiservice/server/api/query_builder.py:84-103,
-    is the one-plan-per-query anti-scale shape this replaces).
+    baseline and the embedding analogue of batchjoin.batch_knn (the
+    reference runs one ORDER BY distance + LIMIT plan per request,
+    reference openpoiservice/server/api/query_builder.py:84-103).
 
-    Shape: broadcast the query set (small side by construction — a probe
-    batch, not the corpus), BroadcastNestedLoopJoin against the embedding
-    table (every executor streams its local rows past the resident query
-    block: no shuffle of the big side), exact cosine, per-partition partial
-    top-k in an Arrow pass, then one row_number window over <= k rows per
-    (partition, query).  For query sets too large to broadcast, use the
-    bucketed `batch_topk` / `batch_topk_ivf` whose probe join is an
-    equi-join.
-
-    Round 7: the pair enumeration + cosine run in ONE Arrow pass over the
-    embedding side against the driver-materialized query block (the same
-    memory class as the former BroadcastNestedLoopJoin's broadcast side) —
-    per-pair math is a vectorized numpy kernel with left-to-right
-    accumulation, bit-identical to the former JVM expression; F.round and
-    the ranking window stay in the JVM."""
+    Shape: the query set is materialized on the driver (a probe batch, not
+    the corpus) and shipped with the task closure; ONE Arrow pass over the
+    slim embedding side computes every (row, query) cosine with a
+    vectorized numpy kernel whose left-to-right accumulation is
+    bit-identical to the JVM `_dot`, feeding the shared per-task partial
+    top-k; F.round and the ranking window run in the JVM over <= ~k rows
+    per (task, query).  For query sets too large to hold on the driver,
+    use `batch_topk_ivf`, whose probe join is a JVM equi-join."""
     return _batch_topk_arrow(emb, queries, k, None, query_id, qvec_col)
 
 
@@ -685,55 +624,33 @@ def batch_recall(approx: DataFrame, exact: DataFrame, k: int,
 def batch_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
                planes: np.ndarray | None = None,
                query_id: str = "query_id", qvec_col: str = "qvec",
-               fill: bool = True,
-               broadcast_queries: bool = True) -> DataFrame:
+               fill: bool = True) -> DataFrame:
     """Approximate batch top-k: N query vectors, the k nearest each, ONE
     distributed job (no per-query plan, no driver loop over queries).
 
     Shape:
-      1. LSH-bucket BOTH sides with the same hyperplanes (at 100 TB the
-         table side is precomputed and the table clustered on it);
-      2. explode each query into its Hamming<=1 probe buckets (P+1 rows per
-         query — the query side stays tiny);
-      3. ONE equi-join on the int bucket key (broadcast by default; set
-         broadcast_queries=False for huge query sets — the join then
-         shuffles on the bucket key both sides);
-      4. exact cosine + per-partition partial top-k (Arrow pass) + global
-         row_number — <= k rows per (partition, query) ever shuffle;
-      5. fill=True (the correctness fence): any query whose candidate set
-         came up short of k is re-answered EXACTLY via the brute broadcast
-         path — one extra pass over only the under-filled queries (the same
-         re-probe policy batchjoin.batch_knn applies to geo kNN).  The
-         driver-side work is one count of the under-filled set.
+      1. LSH-bucket BOTH sides with the same hyperplanes (bucket math is
+         bit-identical to `bucket_col`); each query probes its own bucket
+         and its Hamming<=1 neighbours;
+      2. the probe set is materialized on the driver (bounded by the probe
+         batch) and the bucket 'join' + exact cosine run in ONE Arrow pass
+         over the slim embedding side, feeding the shared per-task partial
+         top-k;
+      3. F.round and one row_number window in the JVM — <= ~k rows per
+         (task, query) ever shuffle;
+      4. fill=True (the correctness fence): any query whose candidate set
+         came up short of k is re-answered EXACTLY via the brute path — one
+         extra pass over only the under-filled queries (the same re-probe
+         policy batchjoin.batch_knn applies to geo kNN).  The driver-side
+         work is one take(1) on the under-filled set.
     Returns (query_id, vec_id, cosine), deterministic (rounded-cosine rank,
-    vec_id tie-break).
-
-    Round 7 (broadcast path): the bucket equi-join + per-pair cosine run in
-    ONE Arrow pass over the (slim) embedding side against the
-    driver-materialized probe set — same candidate set (bucket math is
-    bit-identical), same memory class as the former BroadcastExchange,
-    vectorized numpy arithmetic instead of per-pair JVM higher-order
-    functions.  broadcast_queries=False keeps the shuffled equi-join for
-    query sets too large to hold in one block."""
+    NULL last, vec_id tie-break)."""
     planes = hyperplanes() if planes is None else planes
-    if broadcast_queries:
-        topk = _batch_topk_arrow(emb, queries, k, planes, query_id, qvec_col)
-        if not fill:
-            return topk
-        q = _norm_queries(queries, query_id, qvec_col)
-        return _fill_underfilled(emb, q, topk, k)
+    topk = _batch_topk_arrow(emb, queries, k, planes, query_id, qvec_col)
+    if not fill:
+        return topk
     q = _norm_queries(queries, query_id, qvec_col)
-    b = _normed_emb(emb).withColumn(
-        "bucket", bucket_col(F.col("embedding"), planes))
-    qb = q.withColumn("qb", bucket_col(F.col("qvec"), planes))
-    probe_arr = F.array(F.col("qb"), *[
-        F.col("qb").bitwiseXOR(F.lit(1 << p)) for p in range(len(planes))])
-    probes = qb.select("query_id", "qvec", "_qn",
-                       F.explode(probe_arr).alias("bucket"))
-    cand = b.alias("e").join(probes.alias("q"), "bucket") \
-            .select(*_cand_cols())
-    topk = _topk_per_query(cand, k)
-    return _fill_underfilled(emb, q, topk, k) if fill else topk
+    return _fill_underfilled(emb, q, topk, k)
 
 
 def batch_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -748,7 +665,10 @@ def batch_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
     is free and the join keys align with the table's partitioning.  The
     per-query probe pick (argsort of the codebook dots) is a pure JVM
     expression — array_sort of (negated dot, index) structs, so ties break
-    to the LOWEST index exactly like ivf_topk's driver-side argsort."""
+    to the LOWEST index exactly like ivf_topk's driver-side argsort.
+    broadcast_queries=False drops the broadcast hint on the probe side (the
+    join may then shuffle both sides on the cell id); the candidates feed
+    the same partial top-k and rank either way."""
     centroids = ivf_centroids() if centroids is None else centroids
     q = _norm_queries(queries, query_id, qvec_col)
     a = _normed_emb(emb).withColumn(
@@ -764,7 +684,7 @@ def batch_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
         probes = F.broadcast(probes)
     cand = a.alias("e").join(probes.alias("q"), "ivf_cell") \
             .select(*_cand_cols())
-    topk = _topk_per_query(cand, k)
+    topk = _topk(cand, k)
     return _fill_underfilled(emb, q, topk, k) if fill else topk
 
 
@@ -796,7 +716,7 @@ def batch_topk_ivf_table(spark, path: str, queries: DataFrame, k: int = 10,
                       F.explode(probe_arr).alias("ivf_cell"))
     cand = a.alias("e").join(F.broadcast(probes).alias("q"), "ivf_cell") \
             .select(*_cand_cols())
-    topk = _topk_per_query(cand, k)
+    topk = _topk(cand, k)
     if not fill:
         return topk
     emb = spark.read.parquet(path).select("vec_id", "embedding")
@@ -934,9 +854,10 @@ def cosine_pairs(emb: DataFrame, threshold: float = 0.9,
     pairs = l.join(
         r, (F.col("l.bucket") == F.col("r.bucket")) & (F.col("l.vec_id") < F.col("r.vec_id"))
     )
+    # a zero-norm vector's cosine is NULL, so it never passes the threshold
     cos = F.round(
-        _dot(F.col("l.embedding"), F.col("r.embedding"))
-        / (F.col("l._nrm") * F.col("r._nrm")),
+        F.try_divide(_dot(F.col("l.embedding"), F.col("r.embedding")),
+                     F.col("l._nrm") * F.col("r._nrm")),
         6,
     )
     return (
@@ -1335,10 +1256,10 @@ def batch_topk_ivfpq_table(spark, path: str, queries: DataFrame,
     ).select(
         F.col("q.query_id"),
         F.col("e.vec_id"),
-        F.round(_dot(F.col("q.qvec"), F.col("e._recon"))
-                / F.col("q._qn"), 6).alias("cosine"),
+        (-F.try_divide(_dot(F.col("q.qvec"), F.col("e._recon")),
+                       F.col("q._qn"))).alias("neg_cos"),
     )
-    short = _topk_per_query(cand, k * shortlist)
+    short = _topk(cand, k * shortlist)
 
     # probed-cell union is bounded by the codebook size C — the same
     # bounded-footprint collect contract batchjoin's pcell pruning uses
@@ -1355,11 +1276,11 @@ def batch_topk_ivfpq_table(spark, path: str, queries: DataFrame,
         .join(F.broadcast(q.select("query_id", "qvec", "_qn")), "query_id")
         .select(
             "query_id", "vec_id",
-            F.round(_dot(F.col("embedding"), F.col("qvec"))
-                    / (F.col("_en") * F.col("_qn")), 6).alias("cosine"),
+            (-F.try_divide(_dot(F.col("embedding"), F.col("qvec")),
+                           F.col("_en") * F.col("_qn"))).alias("neg_cos"),
         )
     )
-    topk = _topk_per_query(exact, k)
+    topk = _topk(exact, k)
     if not fill:
         return topk
     emb = spark.read.parquet(path).select("vec_id", "embedding")

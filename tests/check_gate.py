@@ -3,10 +3,11 @@ oracle_sql() twins exactly like the driver (row count + sorted-column value
 hash).  Usage: python tests/check_gate.py sf0.001 pois_batch_join ..."""
 import hashlib
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as E  # noqa: E402
 from openpoiservice_spark.session import get_spark  # noqa: E402
 

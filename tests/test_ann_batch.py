@@ -1,11 +1,15 @@
 """Batch embedding top-k (operators/ann.py batch_topk*): N query vectors,
 the k nearest each, ONE distributed job — the embedding analogue of
-batchjoin.batch_knn (round-5 verdict item 2).  The reference answers one
-ORDER BY distance + LIMIT plan per request
-(reference openpoiservice/server/api/query_builder.py:84-103); these tests
-pin the batched shape: exact parity with the per-query path, the fill
-fence, determinism, and the no-cartesian plan contract."""
+batchjoin.batch_knn.  The reference answers one ORDER BY distance + LIMIT
+plan per request (reference
+openpoiservice/server/api/query_builder.py:84-103); these tests pin the
+batched shape: exact parity with the per-query path, the fill fence,
+determinism, the no-cartesian plan contract, the zero-norm NULL policy and
+the partial stage's memory bound."""
 
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,23 +89,6 @@ def test_ivf_batch_fill_guarantees_k_rows(emb, queries):
     assert set(per_q.values()) == {10}
 
 
-def test_lsh_candidate_plan_is_equi_join(spark, emb, queries):
-    """Scale contract: the probe join is an EQUI-join on the int bucket key
-    — no cartesian, no nested loop — even with auto-broadcast disabled and
-    the explicit broadcast hint off (both sides big: the 100 TB case)."""
-    planes = ANN.hyperplanes(8, 64, 13)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = _plan(ANN.batch_topk(emb, queries, k=10, planes=planes,
-                                    fill=False, broadcast_queries=False))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan)
-
-
 def test_ivf_table_batch_matches_unindexed(spark, emb, queries, tmp_path):
     """batch_topk_ivf_table over the write_ivf_table layout returns exactly
     what the unindexed batch path returns, and its probe join drives the
@@ -125,15 +112,6 @@ def test_ivf_table_batch_matches_unindexed(spark, emb, queries, tmp_path):
         fill=False)._jdf.queryExecution().executedPlan().toString()
     assert "ivf_cell" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_unbroadcast_path_same_result(emb, queries):
-    planes = ANN.hyperplanes(8, 64, 13)
-    a = ANN.batch_topk(emb, queries, k=10, planes=planes)
-    b = ANN.batch_topk(emb, queries, k=10, planes=planes,
-                       broadcast_queries=False)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
 
 
 def test_codebook_sidecar_and_append(spark, emb, tmp_path):
@@ -299,27 +277,6 @@ def test_append_ivfpq_table_parity_and_idempotence(spark, emb, tmp_path):
         ANN.append_ivfpq_table(spark, missing, emb.limit(5))
 
 
-def test_partial_topk_keeps_valid_rows_beside_nan():
-    """NaN cosines (zero-norm vectors) never decide the k-th value: with
-    2 valid and 3 NaN rows and k=4, both valid rows survive, and the NaN
-    rows pass through to the JVM ranking."""
-    import numpy as np
-    import pandas as pd
-
-    part = pd.DataFrame({"query_id": [7] * 5, "vec_id": [1, 2, 3, 4, 5],
-                         "cosine_raw": [np.nan, 0.5, np.nan, 0.9, np.nan]})
-    out = ANN._emit_partial_topk([part], k=4)
-    assert sorted(out["vec_id"].tolist()) == [1, 2, 3, 4, 5]
-    fin = out[np.isfinite(out["cosine_raw"])]
-    assert fin["vec_id"].tolist() == [4, 2]
-
-    # per query: the k-th finite value still prunes
-    two = pd.DataFrame({"query_id": [1, 1, 1, 2, 2], "vec_id": [1, 2, 3, 4, 5],
-                        "cosine_raw": [0.1, 0.8, 0.5, np.nan, 0.3]})
-    kept = ANN._emit_partial_topk([two], k=1)
-    assert sorted(kept["vec_id"].tolist()) == [2, 4, 5]
-
-
 def test_np_dot_lr_bit_identical_to_per_dimension_loop():
     """The scratch-buffer dot keeps the same left-to-right adds as one
     fresh product array per dimension."""
@@ -332,3 +289,178 @@ def test_np_dot_lr_bit_identical_to_per_dimension_loop():
     for d in range(64):
         ref += E[:, d, None] * Q[None, :, d]
     assert np.array_equal(ANN._np_dot_lr(E, Q), ref)
+
+
+# ----------------------------------------------------- zero-norm vectors
+
+def _lr_cosine(e, q):
+    """Oracle cosine: plain left-to-right double sums (the JVM `_dot`
+    order); a zero norm gives None, as 0.0/0.0 gives NULL in SQL."""
+    dot = ne = nq = 0.0
+    for a, b in zip(e, q):
+        dot += float(a) * float(b)
+        ne += float(a) * float(a)
+        nq += float(b) * float(b)
+    den = math.sqrt(ne) * math.sqrt(nq)
+    return None if den == 0.0 else round(dot / den, 6)
+
+
+def _null_last(pairs):
+    """(vec_id, cosine) pairs in the oracle's order: cosine descending,
+    NULL last, vec_id ascending."""
+    return sorted(pairs, key=lambda t: (t[1] is None, -(t[1] or 0.0), t[0]))
+
+
+def _oracle_topk(rows, q, k):
+    return _null_last((r.vec_id, _lr_cosine(r.embedding, q))
+                      for r in rows)[:k]
+
+
+@pytest.fixture(scope="module")
+def zero_emb(spark, emb):
+    """24 corpus rows, 6 of them all-zero vectors."""
+    return emb.filter(F.col("vec_id") < 24).select(
+        "vec_id",
+        F.when(F.col("vec_id") % 4 == 1,
+               F.array_repeat(F.lit(0.0).cast("float"), 64))
+        .otherwise(F.col("embedding")).alias("embedding"),
+        "label").cache()
+
+
+def test_zero_norm_vectors_rank_last_with_null_cosine(spark, zero_emb,
+                                                      tmp_path):
+    """Every cosine path returns the oracle's rows on a corpus with
+    zero-norm vectors: those rank after every valid row, by vec_id, with a
+    NULL cosine (DuckDB's 0.0/0.0 semantics).  Every probe covers the whole
+    corpus, so k=20 of 24 rows reaches two zero vectors.  cosine_pairs
+    drops the NULL pairs."""
+    rows = zero_emb.collect()
+    k, cents = 20, ANN.ivf_centroids(4, 64, 21)
+    planes = ANN.hyperplanes(1, 64, 13)  # 2 buckets: Hamming<=1 covers all
+    qvecs = [ANN.query_vector(64, s) for s in (7, 8, 9)]
+    ivf = str(tmp_path / "ivf")
+    ANN.write_ivf_table(zero_emb, ivf, cents)
+    # pq_encode cannot encode a zero vector (its unit normalization divides
+    # by the norm), so the zero rows join the IVF-PQ layout with code 0
+    ivfpq = str(tmp_path / "ivfpq")
+    ANN.write_ivfpq_table(zero_emb.filter(F.col("vec_id") % 4 != 1), ivfpq,
+                          cents)
+    (zero_emb.filter(F.col("vec_id") % 4 == 1)
+     .withColumn("ivf_cell", ANN.ivf_assign_col(F.col("embedding"), cents))
+     .withColumn("codes", F.array_repeat(F.lit(0), 8))
+     .write.mode("append").partitionBy("ivf_cell").parquet(ivfpq))
+
+    single = {
+        "brute_topk": lambda q: ANN.brute_topk(zero_emb, q, k),
+        "lsh_topk": lambda q: ANN.lsh_topk(zero_emb, q, k, planes),
+        "ivf_topk": lambda q: ANN.ivf_topk(zero_emb, q, k, cents, 4),
+        "ivf_topk_table": lambda q: ANN.ivf_topk_table(spark, ivf, q, k,
+                                                       nprobe=4),
+        "ivfpq_topk_table": lambda q: ANN.ivfpq_topk_table(
+            spark, ivfpq, q, k, nprobe=4, shortlist=2),
+    }
+    for name, fn in single.items():
+        for q in qvecs:
+            got = [(r.vec_id, r.cosine) for r in fn(q).collect()]
+            assert got == _oracle_topk(rows, q, k), name
+
+    qdf = spark.createDataFrame(
+        [(i, [float(x) for x in q]) for i, q in enumerate(qvecs)],
+        "query_id long, qvec array<double>")
+    batch = {
+        "batch_topk_brute": ANN.batch_topk_brute(zero_emb, qdf, k),
+        "batch_topk": ANN.batch_topk(zero_emb, qdf, k, planes),
+        "batch_topk_ivf": ANN.batch_topk_ivf(zero_emb, qdf, k, cents, 4),
+        "batch_topk_ivf_table": ANN.batch_topk_ivf_table(
+            spark, ivf, qdf, k, nprobe=4),
+        "batch_topk_ivfpq_table": ANN.batch_topk_ivfpq_table(
+            spark, ivfpq, qdf, k, nprobe=4, shortlist=2),
+    }
+    for name, df in batch.items():
+        got = df.collect()
+        for i, q in enumerate(qvecs):
+            want = _oracle_topk(rows, q, k)
+            assert want[-2:] == [(1, None), (5, None)]
+            assert _null_last((r.vec_id, r.cosine) for r in got
+                              if r.query_id == i) == want, name
+
+    # near-dup pairs: a zero vector pairs with nothing, even at threshold -1
+    def bucket(e):
+        dot = 0.0
+        for a, p in zip(e, planes[0]):
+            dot += float(a) * float(p)
+        return int(dot > 0)
+
+    want = {(a.vec_id, b.vec_id, _lr_cosine(a.embedding, b.embedding))
+            for a in rows for b in rows
+            if a.vec_id < b.vec_id and bucket(a.embedding) ==
+            bucket(b.embedding) and a.vec_id % 4 != 1 and b.vec_id % 4 != 1}
+    got = {tuple(r) for r in ANN.cosine_pairs(zero_emb, -1.0, planes)
+           .collect()}
+    assert got == want and len(want) > 50
+
+
+def _brute_body(E, vids, Q, k, batch_rows):
+    """Drive the brute mapInPandas body as plain Python over Arrow-sized
+    batches built lazily, the way a task receives them."""
+    import pandas as pd
+
+    body = ANN._np_candidates_fn(np.arange(len(Q), dtype=np.int64), Q,
+                                 ANN._np_norm_lr(Q), None, None, k)
+    batches = (pd.DataFrame({"vec_id": vids[i:i + batch_rows],
+                             "embedding": list(E[i:i + batch_rows])})
+               for i in range(0, len(E), batch_rows))
+    return pd.concat(list(body(batches)))
+
+
+def test_partial_stage_emits_at_most_k_nan_rows():
+    """A zero-norm vector scores NaN against every query: the partial stage
+    keeps at most k of them per (task, query), the smallest vec_ids, not
+    one row per zero vector and query."""
+    rng = np.random.default_rng(3)
+    E = rng.standard_normal((300, 64)).astype(np.float32)
+    E[::10] = 0.0  # 30 zero vectors
+    Q = rng.standard_normal((7, 64))
+    out = _brute_body(E, np.arange(300, dtype=np.int64), Q, 5, 64)
+    assert not out.iloc[:, 2].isna().any()  # 270 valid rows fill each top 5
+    E[30:] = 0.0  # now only 27 valid rows remain, all in rows 1..29
+    out = _brute_body(E, np.arange(300, dtype=np.int64), Q, 40, 64)
+    nan = out.iloc[:, 2].isna()  # the score column
+    assert set(nan.groupby(out["query_id"]).sum()) == {13}
+    assert set(out.groupby("query_id").size()) == {40}
+    nan_ids = sorted(set(out.loc[nan, "vec_id"]))
+    assert nan_ids == [0, 10, 20] + list(range(30, 40))
+
+
+def test_brute_partial_stage_memory_bound():
+    """The brute body on 20,000 rows x 200 queries in 2,048-row batches
+    holds a bounded buffer (a tracemalloc peak under 150 MB; buffering
+    every candidate pair peaks near 620 MB) and its partials hold the same
+    final ranking as a one-shot numpy oracle."""
+    import tracemalloc
+
+    rng = np.random.default_rng(11)
+    n, nq, k = 20_000, 200, 10
+    E = rng.standard_normal((n, 64)).astype(np.float32)
+    E[::97] = 0.0
+    vids = rng.permutation(10 * n)[:n].astype(np.int64)
+    Q = rng.standard_normal((nq, 64))
+    tracemalloc.start()
+    try:
+        out = _brute_body(E, vids, Q, k, 2048)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 150 * 2**20, peak
+
+    E64 = E.astype(np.float64)
+    norms = np.linalg.norm(E64, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = (E64 @ Q.T) / (norms[:, None] * np.linalg.norm(Q, axis=1))
+    for qi in range(nq):
+        want = vids[np.lexsort((vids, -cos[:, qi]))[:k]]
+        part = out[out["query_id"] == qi]
+        got = part["vec_id"].to_numpy()[
+            np.lexsort((part["vec_id"].to_numpy(),
+                        part["neg_cos"].to_numpy()))[:k]]
+        assert got.tolist() == want.tolist()

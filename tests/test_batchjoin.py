@@ -483,33 +483,6 @@ def test_batch_knn_pcell_pruning_coarse_reprobe(spark, fixture_paths):
     assert got == want and sum(got.values()) == 3
 
 
-def test_knn_local_topk_prune_path():
-    """The per-partition partial top-k must give identical results whether
-    the memory-bound prune fires every few rows or never (the 100 TB path
-    IS the pruning path — a silent prune bug would drop true neighbours)."""
-    import pandas as pd
-
-    rng = np.random.default_rng(71)
-    batches = []
-    for _ in range(6):
-        n = 500
-        batches.append(pd.DataFrame({
-            "query_id": rng.integers(0, 7, n),
-            "poi_id": rng.integers(0, 100000, n),
-            "lon": 8.0 + rng.random(n), "lat": 52.0 + rng.random(n),
-            "qlon": 8.5 + 0.01 * rng.integers(0, 7, n),
-            "qlat": 52.5 + np.zeros(n),
-        }))
-    tight = BJ._knn_local_topk_fn(5, ["poi_id"], "lon", "lat", prune_at=16)
-    loose = BJ._knn_local_topk_fn(5, ["poi_id"], "lon", "lat",
-                                  prune_at=10**9)
-    a = pd.concat(list(tight(iter([b.copy() for b in batches]))))
-    b = pd.concat(list(loose(iter([b.copy() for b in batches]))))
-    key = lambda df: sorted(map(tuple, df[["query_id", "poi_id"]].values))  # noqa: E731
-    assert key(a) == key(b)
-    assert set(a.groupby("query_id").size()) == {5}
-
-
 def test_batch_join_salting_composes_with_pcell_pruning(spark, fixture_paths):
     """The two scale features together — skew salting AND footprint
     partition pruning — must compose without changing one pair."""
