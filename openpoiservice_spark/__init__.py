@@ -18,7 +18,8 @@ Architecture (see SURVEY.md for the full blueprint):
     remaining per-row Python (image decode, batch-join refine, operators)
     is Arrow-vectorized pandas code, never row-at-a-time Python.
   * driver-side query compilation mirroring the reference's request
-    lifecycle (validation, category-group expansion, geometry admission).
+    lifecycle (validation, category-group expansion, geometry admission),
+    into one Spark SQL statement per request.
 """
 
 __version__ = "0.1.0"

@@ -2,15 +2,24 @@
 request payloads (reference openpoiservice/server/api/views.py:78-153).
 
 A request dict {"request": "pois"|"stats"|"list", "geometry": {...},
-"filters": {...}, "limit": n, "sortby": ...} compiles to a DataFrame plan:
+"filters": {...}, "limit": n, "sortby": ...} compiles to ONE Spark SQL
+statement, parsed and analysed once, as the reference hands PostGIS one
+statement per request (reference query_builder.py:31-113):
 
-    scan(prepared, pruned columns)
-      -> cell-cover prefilter        (partition + row-group pruning; the
-                                      GiST-prefilter analogue, misc.sql:50)
-      -> exact refine, native expr   (the `_st_dwithin` recheck analogue)
-      -> category / custom filters   (reference query_builder.py:46-53,142-158)
-      -> distance column (quirk Q5)  -> orderBy -> limit(n-1, quirk Q1)
-      -> collect -> GeoJSON assembly (reference query_builder.py:211-267)
+    SELECT * FROM (
+      SELECT <columns>, <tags, category_ids (Q2)>, <distance (Q5)>
+      FROM <the engine's view of the prepared table> [JOIN <cover>]
+      WHERE <cell-cover prefilter>        (partition + row-group pruning; the
+                                           GiST-prefilter analogue, misc.sql:50)
+        AND <category / custom filters>   (query_builder.py:46-53,142-158)
+    ) WHERE <exact refine, native expr>   (the `_st_dwithin` recheck analogue)
+    ORDER BY distance, osm_id LIMIT n-1   (quirk Q1)
+      -> collect -> GeoJSON assembly      (query_builder.py:211-267)
+
+A `stats` request explodes the category ids of the prefiltered, refined
+rows and counts them per category.  Custom tag filter values (user
+strings) travel as named parameter markers, never as SQL text; category
+and cell ids are int()-cast, coordinates written as exact double literals.
 
 Cover-join strategy (driver-side, the cover size is known before launch —
 SURVEY.md §4 'join strategy choice'):
@@ -21,7 +30,9 @@ SURVEY.md §4 'join strategy choice'):
 
 from __future__ import annotations
 
+import math
 import time
+import uuid
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -30,8 +41,8 @@ from pyspark.sql import functions as F
 
 from . import cells, config, geo, prepare, taxonomy
 from .captions import truncate6
-from .functions import (cell_parent_expr, cell_parent_sql, isin_expr,
-                        make_distance_udf, make_refine_udf)
+from .functions import (_d, _distance_sql, cell_parent_sql, isin_sql,
+                        make_distance_udf, refine_sql)
 
 
 class InvalidUsage(Exception):
@@ -59,17 +70,55 @@ class CompiledQuery:
 _SUPPORTED = {"Point", "LineString", "Polygon", "MultiPolygon"}
 
 
-def apply_limit_quirk(df: DataFrame, limit: int) -> DataFrame:
-    """Quirk Q1 (shared by PoiEngine and the correctness gate): the
-    reference's assembly loop breaks after appending the (limit-1)-th
-    feature (query_builder.py:259-261) — EXCEPT limit=1, whose break
-    condition (q_idx == limit-2 == -1) never fires, returning ALL features.
-    Out-of-range limits fail schema validation (views.py:67-69)."""
+def _limit_rows(limit: int) -> int | None:
+    """Quirk Q1: the reference's assembly loop breaks after appending the
+    (limit-1)-th feature (query_builder.py:259-261) — EXCEPT limit=1, whose
+    break condition (q_idx == limit-2 == -1) never fires, returning ALL
+    features (None here).  Out-of-range limits fail schema validation
+    (views.py:67-69)."""
     if not 1 <= limit <= config.RESPONSE_LIMIT:
         raise InvalidUsage("limit must be in [1, %d]" % config.RESPONSE_LIMIT, 4000)
-    if limit == 1:
-        return df
-    return df.limit(limit - 1)
+    return None if limit == 1 else limit - 1
+
+
+def apply_limit_quirk(df: DataFrame, limit: int) -> DataFrame:
+    """Quirk Q1 on a DataFrame (shared by PoiEngine and the correctness
+    gate)."""
+    n = _limit_rows(limit)
+    return df if n is None else df.limit(n)
+
+
+def _finite(x) -> bool:
+    """x is a finite number, or a (nested) list of finite numbers."""
+    if isinstance(x, (list, tuple)):
+        return all(_finite(v) for v in x)
+    try:
+        return math.isfinite(float(x))
+    except (TypeError, ValueError):
+        return False
+
+
+def _category_ids(filters: dict) -> list[int] | None:
+    """The request's category filter — explicit ids plus the members of the
+    named groups (reference views.py:108-109) — as ints; None when the
+    request names neither."""
+    category_ids = filters.get("category_ids")
+    if filters.get("category_group_ids"):
+        try:
+            category_ids = taxonomy.expand_group_ids(
+                filters["category_group_ids"], category_ids or []
+            )
+        except (TypeError, ValueError) as e:
+            raise InvalidUsage(str(e), 4000) from None
+    if category_ids is None:
+        return None
+    if len(filters.get("category_ids", [])) > config.MAXIMUM_CATEGORIES or \
+       len(filters.get("category_group_ids", [])) > config.MAXIMUM_CATEGORIES:
+        raise InvalidUsage("too many categories", 4000)
+    try:
+        return [int(c) for c in category_ids]
+    except (TypeError, ValueError):
+        raise InvalidUsage("category ids must be integers", 4000) from None
 
 
 def _parse_geojson(gj: dict) -> tuple[str, list]:
@@ -109,7 +158,14 @@ def compile_geometry(geometry: dict) -> list[CompiledQuery]:
     Returns one CompiledQuery per polygon (MultiPolygon fans out, Q7)."""
     if not isinstance(geometry, dict) or ("bbox" not in geometry and "geojson" not in geometry):
         raise InvalidUsage("bbox or geojson required", 4002)
-    buffer_m = float(geometry.get("buffer", 0))
+    # NaN passes every admission comparison, and the cover and the SQL
+    # text need finite numbers: non-finite input is rejected up front
+    try:
+        buffer_m = float(geometry.get("buffer", 0))
+    except (TypeError, ValueError):
+        raise InvalidUsage("buffer must be a number", 4000) from None
+    if not math.isfinite(buffer_m):
+        raise InvalidUsage("buffer must be a finite number", 4000)
 
     bbox_spec = None
     if "bbox" in geometry:
@@ -118,6 +174,8 @@ def compile_geometry(geometry: dict) -> list[CompiledQuery]:
             (x1, y1), (x2, y2) = bb
         except Exception as e:  # noqa: BLE001 — mirror reference 4007 on bad bbox
             raise InvalidUsage(f"invalid bbox: {e}", 4007) from None
+        if not _finite([x1, y1, x2, y2]):
+            raise InvalidUsage("bbox corners must be finite numbers", 4007)
         bbox_spec = geo.bbox_spec(min(x1, x2), min(y1, y2), max(x1, x2), max(y1, y2))
         if bbox_spec.planar_area_m2() > config.MAXIMUM_AREA_M2:
             raise InvalidUsage("Your polygon geometry is too large", 4008)
@@ -132,6 +190,8 @@ def compile_geometry(geometry: dict) -> list[CompiledQuery]:
     # runs (views.py:215 vs :244), so its "buffer missing" error is
     # unreachable — a geojson request without 'buffer' is legal here too
     gtype, coords = _parse_geojson(geometry["geojson"])
+    if not _finite(coords):
+        raise InvalidUsage("geojson coordinates must be finite numbers", 4007)
     polys = coords if gtype == "MultiPolygon" else [coords]
     out = []
     total_area = 0.0
@@ -169,6 +229,11 @@ class PoiEngine:
         self.invalid_log = invalid_log
         self.spheroid_distance = spheroid_distance
         self._df = prepare.read_prepared(spark, prepared_dir)
+        # statements read the table through this engine's own temp view,
+        # registered once: a view made per statement (spark.sql's {df}
+        # form) is created, analysed and dropped on every request
+        self._view = f"opss_prepared_{uuid.uuid4().hex}"
+        self._df.createOrReplaceTempView(self._view)
         self._pcell_rows = self._load_pcell_stats()
 
     def _log_invalid(self, payload, error_code: int) -> None:
@@ -211,12 +276,14 @@ class PoiEngine:
             for pc, c in zip(pcs, counts)
         ))
 
-    def _prefilter(self, df: DataFrame, cq: CompiledQuery) -> DataFrame:
-        """Cell-cover prefilter with size-adaptive join strategy (J7).
-        Strategy choice is DENSITY-AWARE: measured per-pcell row counts from
-        the lineage table refine the cover on dense regions (fewer
-        false-positive rows reach the exact refine), which in turn flips
-        IN-pushdown -> broadcast-hash through the size thresholds."""
+    def _prefilter(self, cq: CompiledQuery) -> tuple[str, str, dict]:
+        """Cell-cover prefilter with size-adaptive join strategy (J7), as
+        the statement's (FROM source, WHERE predicate, DataFrames for the
+        source's {name} slots).  Strategy choice is DENSITY-AWARE: measured
+        per-pcell row counts from the lineage table refine the cover on
+        dense regions (fewer false-positive rows reach the exact refine),
+        which in turn flips IN-pushdown -> broadcast-hash through the size
+        thresholds."""
         region = cq.refine_spec
         res = cells.pick_cover_res(region, cq.refine_buffer)
         cover = cells.cover_geometry(region, cq.refine_buffer, res)
@@ -229,7 +296,7 @@ class PoiEngine:
             cover = np.intersect1d(cover, bcover)
         cq.cover = cover
         if cover.size == 0:
-            return df.filter(F.lit(False))
+            return self._view, "false", {}
         # pushable lon/lat range conjunct (implied by the cover, so it never
         # changes results): plain-column comparisons reach parquet row-group
         # min/max stats, pruning byte ranges the derived-cell predicates
@@ -238,29 +305,21 @@ class PoiEngine:
         # become a disjunction of the two wrapped ranges.
         mnx, mny, mxx, mxy = region.buffered_bounds(cq.refine_buffer)
         if mxx - mnx >= 360.0:
-            lon_pred = F.lit(True)
+            lon_pred = "true"
         elif mxx > 180.0:
-            lon_pred = (F.col("lon") >= float(mnx)) | (F.col("lon") <= float(mxx - 360.0))
+            lon_pred = f"(lon >= {_d(mnx)} OR lon <= {_d(mxx - 360.0)})"
         elif mnx < -180.0:
-            lon_pred = (F.col("lon") <= float(mxx)) | (F.col("lon") >= float(mnx + 360.0))
+            lon_pred = f"(lon <= {_d(mxx)} OR lon >= {_d(mnx + 360.0)})"
         else:
-            lon_pred = (F.col("lon") >= float(mnx)) & (F.col("lon") <= float(mxx))
-        df = df.filter(
-            lon_pred & (F.col("lat") >= float(mny)) & (F.col("lat") <= float(mxy))
-        )
+            lon_pred = f"lon >= {_d(mnx)} AND lon <= {_d(mxx)}"
         pcover = np.unique(cells.cell_parent(cover, cells.PARTITION_RES)).tolist()
-        cell_col = (
-            F.col("cell") if res == cells.DEFAULT_RES
-            else cell_parent_expr(F.col("cell"), cells.DEFAULT_RES, res)
-        )
-        # IN lists as single parsed expressions: Column.isin pays one py4j
-        # round-trip PER literal (~0.3 s of driver latency on a 400-cell
-        # cover — pure request-path overhead at the service tier)
-        df = df.filter(isin_expr("pcell", pcover))
+        preds = [lon_pred, f"lat >= {_d(mny)} AND lat <= {_d(mxy)}",
+                 isin_sql("pcell", pcover)]
+        cell_sql = ("cell" if res == cells.DEFAULT_RES
+                    else cell_parent_sql("cell", cells.DEFAULT_RES, res))
         if cover.size <= config.ISIN_COVER_THRESHOLD:
-            cell_sql = ("cell" if res == cells.DEFAULT_RES
-                        else cell_parent_sql("cell", cells.DEFAULT_RES, res))
-            return df.filter(isin_expr(cell_sql, cover.tolist()))
+            preds.append(isin_sql(cell_sql, cover.tolist()))
+            return self._view, " AND ".join(preds), {}
         # pandas -> Arrow fast path: a 200k-cell cover as a list of tuples
         # costs seconds of driver-side pickling; a numpy-backed frame ships
         # as one Arrow batch
@@ -268,104 +327,95 @@ class PoiEngine:
 
         cover_df = self.spark.createDataFrame(
             _pd.DataFrame({"qcell": cover.astype("int64")}))
-        joined = df.withColumn("qcell", cell_col)
-        if cover.size <= config.SHUFFLE_COVER_THRESHOLD:
-            return joined.join(F.broadcast(cover_df), "qcell").drop("qcell")
-        return joined.join(cover_df.repartition("qcell"), "qcell").drop("qcell")
+        hint = ("BROADCAST(c)" if cover.size <= config.SHUFFLE_COVER_THRESHOLD
+                else "REPARTITION(qcell)")
+        source = (f"{self._view} JOIN (SELECT /*+ {hint} */ qcell FROM {{cover}} c) q "
+                  f"ON {cell_sql} = q.qcell")
+        return source, " AND ".join(preds), {"cover": cover_df}
 
-    def _apply_filters(self, df: DataFrame, filters: dict | None) -> DataFrame:
-        """Category + custom tag filters, including the array/tag-restriction
-        quirk Q2 and the conjunctive custom-filter quirk Q3."""
-        if not filters:
-            return df
-        category_ids = filters.get("category_ids")
-        if filters.get("category_group_ids"):
-            try:
-                category_ids = taxonomy.expand_group_ids(
-                    filters["category_group_ids"], category_ids or []
-                )
-            except ValueError as e:
-                raise InvalidUsage(str(e), 4000) from None
+    def knn_df(self, lon: float, lat: float, k: int, **kw) -> DataFrame:
+        """Top-k nearest POIs (kNN extension, SURVEY.md §2.3) — seeds the
+        ring radius from the engine's lineage density stats so the dense
+        common case is a single Spark job."""
+        from . import knn as _knn
+
+        return _knn.knn(self._df.drop("bytes", "caption"), lon, lat, k,
+                        pcell_rows=self._pcell_rows, **kw)
+
+    def _pois_sql(self, payload: dict, cq: CompiledQuery) -> tuple[str, dict, dict]:
+        """The un-ordered `pois` statement as (text, the DataFrames its
+        {name} slots stand for, the values of its :name parameter markers):
+        prefilter and category / custom tag filters inside, the exact
+        refine over the computed distance outside.  `bytes` /
+        `caption` are never selected, so they stay out of the scan's
+        ReadSchema."""
+        source, pred, frames = self._prefilter(cq)
+        preds, args = [pred], {}
+        tags, cats = "tags", "category_ids"
+        filters = payload.get("filters") or {}
+        category_ids = _category_ids(filters)
         if category_ids is not None:
-            if len(filters.get("category_ids", [])) > config.MAXIMUM_CATEGORIES or \
-               len(filters.get("category_group_ids", [])) > config.MAXIMUM_CATEGORIES:
-                raise InvalidUsage("too many categories", 4000)
-            lit_ids = F.array(*[F.lit(int(c)) for c in category_ids])
             # P4 membership + Q2: the output array keeps only matching ids
-            df = df.withColumn("category_ids", F.array_intersect("category_ids", lit_ids))
-            df = df.filter(F.size("category_ids") > 0)
-
+            ids = ", ".join(str(c) for c in category_ids)
+            preds.append(f"size(array_intersect(category_ids, array({ids}))) > 0")
+            cats = f"array_intersect(category_ids, array({ids})) AS category_ids"
         custom = {k: filters[k] for k in taxonomy.TAG_WHITELIST if k in filters}
         if custom:
             # reference semantics (query_builder.py:142-158): every custom
             # filter is ANDed onto the SAME joined tag row -> a single tag
             # entry must satisfy all of them (two different keys -> no rows,
             # quirk Q3).  Expressed on the map column via EXISTS over entries.
-            def entry_pred(e):
-                conj = F.lit(True)
-                for k, vals in custom.items():
-                    vals = [str(v) for v in vals]
-                    conj = conj & (e.key == F.lit(k.lower())) & e.value.isin(vals)
-                return conj
-
-            entries = F.map_entries(F.col("tags"))
-            df = df.filter(F.exists(entries, entry_pred))
+            conj = []
+            for i, (k, vals) in enumerate(custom.items()):
+                args[f"k{i}"] = k.lower()
+                marks = []
+                for j, v in enumerate(vals):
+                    args[f"v{i}_{j}"] = str(v)
+                    marks.append(f":v{i}_{j}")
+                conj.append(f"e.key = :k{i} AND "
+                            + (f"e.value IN ({', '.join(marks)})" if marks else "false"))
+            entry = " AND ".join(conj)
+            preds.append(f"exists(map_entries(tags), e -> {entry})")
             # Q2: surviving tag entries only
-            df = df.withColumn(
-                "tags", F.map_from_entries(F.filter(F.map_entries(F.col("tags")), entry_pred))
-            )
-        return df
+            tags = f"map_from_entries(filter(map_entries(tags), e -> {entry})) AS tags"
+        # the refine reads the distance column when both measure the same
+        # geometry, so its edge fold is parsed and analysed once
+        dist = _distance_sql(cq.distance_spec, "lon", "lat")
+        refine = refine_sql(cq.refine_spec, cq.refine_buffer, cq.refine_bbox, "lon", "lat",
+                            "distance" if cq.refine_spec is cq.distance_spec else None)
+        text = (f"SELECT * FROM (SELECT image_id, osm_type, osm_id, lon, lat, cell, "
+                f"pcell, {tags}, {cats}, {dist} AS distance FROM {source} "
+                f"WHERE {' AND '.join(preds)}) WHERE {refine}")
+        return text, frames, args
 
-    def knn_df(self, lon: float, lat: float, k: int, **kw) -> DataFrame:
-        """Top-k nearest POIs (kNN extension, SURVEY.md §2.3) — seeds the
-        ring radius from the engine's lineage density stats so the dense
-        common case is a single Spark job (round-2 latency item)."""
-        from . import knn as _knn
-
-        return _knn.knn(self._df.drop("bytes", "caption"), lon, lat, k,
-                        pcell_rows=self._pcell_rows, **kw)
-
-    @staticmethod
-    def _refine(cq: CompiledQuery):
-        """The exact refine predicate, a native Spark expression."""
-        refine = make_refine_udf(cq.refine_spec, cq.refine_buffer, cq.refine_bbox)
-        return refine(F.col("lon"), F.col("lat"))
-
-    def _pois_base(self, payload: dict, cq: CompiledQuery | None = None) -> DataFrame:
-        """The un-limited POI plan: prefilter -> refine -> filters ->
-        distance.  `bytes`/`caption` deliberately absent: the GeoJSON
-        assembly never needs them, so they must not reach the scan's
-        ReadSchema."""
-        cqs = [cq] if cq is not None else compile_geometry(payload["geometry"])
-        cq = cqs[0]
-        df = self._df.select(
-            "image_id", "osm_type", "osm_id", "lon", "lat", "cell", "pcell",
-            "tags", "category_ids",
-        )
-        df = self._prefilter(df, cq)
-        df = df.filter(self._refine(cq))
-        df = self._apply_filters(df, payload.get("filters"))
-        dist = make_distance_udf(cq.distance_spec, spheroid=self.spheroid_distance)
-        return df.withColumn("distance", dist(F.col("lon"), F.col("lat")))
+    def _pois_base(self, payload: dict, cq: CompiledQuery,
+                   order: tuple[str, ...] = (), limit_rows: int | None = None) -> DataFrame:
+        """The `pois` statement, optionally ordered and limited.  The
+        non-default spheroid point distance replaces `distance` by the
+        Vincenty UDF on the statement's filtered rows, before the order."""
+        text, frames, args = self._pois_sql(payload, cq)
+        tail = (f" ORDER BY {', '.join(order)}" if order else "") + \
+               (f" LIMIT {limit_rows}" if limit_rows is not None else "")
+        if not (self.spheroid_distance and cq.distance_spec.kind == "point"):
+            return self.spark.sql(text + tail, args=args, **frames)
+        vincenty = make_distance_udf(cq.distance_spec, spheroid=True)
+        df = self.spark.sql(text, args=args, **frames).withColumn(
+            "distance", vincenty(F.col("lon"), F.col("lat")))
+        df = df.orderBy(*order) if order else df
+        return df if limit_rows is None else df.limit(limit_rows)
 
     def pois_df(self, payload: dict, cq: CompiledQuery | None = None) -> DataFrame:
-        """The POI query as a DataFrame plan (reference request_pois,
+        """The POI query as one statement (reference request_pois,
         query_builder.py:31-113)."""
-        df = self._pois_base(payload, cq)
-
+        if cq is None:
+            cq = compile_geometry(payload["geometry"])[0]
+        # the reference leaves order planner-defined; we pin (distance,
+        # osm_id) unless sortby=category, so limited results are
+        # deterministic (superset of the reference's guarantee, same rows)
+        order = (("category_ids", "osm_id") if payload.get("sortby") == "category"
+                 else ("distance", "osm_id"))
         limit = int(payload.get("limit", config.RESPONSE_LIMIT))
-
-        sortby = payload.get("sortby")
-        if sortby == "distance":
-            df = df.orderBy("distance", "osm_id")
-        elif sortby == "category":
-            df = df.orderBy("category_ids", "osm_id")
-        else:
-            # the reference leaves order planner-defined; we pin (distance,
-            # osm_id) so limited results are deterministic (superset of the
-            # reference's guarantee, same row set)
-            df = df.orderBy("distance", "osm_id")
-        return apply_limit_quirk(df, limit)
+        return self._pois_base(payload, cq, order, _limit_rows(limit))
 
     def features_df(self, payload: dict, cq: CompiledQuery | None = None) -> DataFrame:
         """DISTRIBUTED GeoJSON feature assembly: one `feature` JSON string
@@ -383,6 +433,8 @@ class PoiEngine:
         the driver assembly in tests.  `distance` is the executor's native
         value, which for point geometries may differ from geo.py's in the
         last bits, < 1e-12 m.)"""
+        if cq is None:
+            cq = compile_geometry(payload["geometry"])[0]
         df = self._pois_base(payload, cq)
         _, _, cat_info, _ = taxonomy.indices()
         entries = []
@@ -537,25 +589,20 @@ class PoiEngine:
         return {"type": "FeatureCollection", "features": features, "bbox": bbox}
 
     def stats_df(self, payload: dict, cq: CompiledQuery | None = None) -> DataFrame:
-        """Category histogram plan (reference query_builder.py:55-67):
-        spatial filter -> explode categories -> groupBy(category).count().
+        """Category histogram statement (reference query_builder.py:55-67):
+        spatial filter -> explode categories -> count per category.
         Explode (not explode_outer) reproduces count(category)'s NULL-skip;
         a POI with two matching categories counts twice (quirk Q8)."""
         if cq is None:
             cq = compile_geometry(payload["geometry"])[0]
-        df = self._df.select("osm_type", "osm_id", "lon", "lat", "cell", "pcell", "category_ids")
-        df = self._prefilter(df, cq)
-        df = df.filter(self._refine(cq))
-        filters = payload.get("filters") or {}
-        category_ids = filters.get("category_ids")
-        if filters.get("category_group_ids"):
-            category_ids = taxonomy.expand_group_ids(
-                filters["category_group_ids"], category_ids or []
-            )
-        ex = df.select(F.explode("category_ids").alias("category"))
-        if category_ids is not None:
-            ex = ex.filter(F.col("category").isin([int(c) for c in category_ids]))
-        return ex.groupBy("category").agg(F.count("category").alias("count"))
+        source, pred, frames = self._prefilter(cq)
+        refine = refine_sql(cq.refine_spec, cq.refine_buffer, cq.refine_bbox, "lon", "lat")
+        category_ids = _category_ids(payload.get("filters") or {})
+        keep = "" if category_ids is None else f" WHERE {isin_sql('category', category_ids)}"
+        return self.spark.sql(
+            f"SELECT category, count(category) AS count FROM (SELECT "
+            f"explode(category_ids) AS category FROM {source} WHERE {pred} "
+            f"AND {refine}){keep} GROUP BY category", args={}, **frames)
 
     def stats(self, payload: dict, cq: CompiledQuery | None = None) -> dict:
         """Nested stats JSON (reference generate_category_stats,

@@ -43,13 +43,17 @@ def isin_expr(col_sql: str, values) -> Column:
     costs one py4j round-trip per literal (~0.8 ms each — a 400-cell cover
     spends ~0.3 s of driver latency just building the predicate); a single
     F.expr string is one round-trip regardless of list size.  Values must be
-    ints (cell ids).  An empty list means 'no cell can match' — return a
-    literal false (`IN ()` is a SQL parse error; the helper must be total,
-    its callers' emptiness guards are non-local)."""
+    ints (cell ids).  An empty list means 'no cell can match' — the
+    predicate is `false` (`IN ()` is a SQL parse error; the helper must be
+    total, its callers' emptiness guards are non-local)."""
+    return F.expr(isin_sql(col_sql, values))
+
+
+def isin_sql(col_sql: str, values) -> str:
+    """isin_expr's SQL text: `col IN (...)` over int()-cast values, or
+    `false` for an empty list."""
     vals = ",".join(str(int(v)) for v in values)
-    if not vals:
-        return F.lit(False)
-    return F.expr(f"{col_sql} IN ({vals})")
+    return f"{col_sql} IN ({vals})" if vals else "false"
 
 
 def cell_parent_sql(col_sql: str, res_from: int, res_to: int) -> str:
@@ -353,13 +357,21 @@ def make_refine_udf(spec: "_geo.GeomSpec", buffer_m: float,
     call it unchanged."""
 
     def refine(lon, lat) -> Column:
-        lon, lat = _col_sql(lon), _col_sql(lat)
-        sql = f"{_distance_sql(spec, lon, lat)} <= {_d(buffer_m)}"
-        if bbox is not None:
-            sql = f"({sql}) AND {_distance_sql(bbox, lon, lat)} <= 0D"
-        return F.expr(sql)
+        return F.expr(refine_sql(spec, buffer_m, bbox, _col_sql(lon), _col_sql(lat)))
 
     return refine
+
+
+def refine_sql(spec: "_geo.GeomSpec", buffer_m: float,
+               bbox: "_geo.GeomSpec | None", lon: str, lat: str,
+               distance: str | None = None) -> str:
+    """make_refine_udf's predicate as SQL text.  `distance`, when given,
+    is SQL already holding `_distance_sql(spec, lon, lat)` (such as a
+    column computed once beside it)."""
+    sql = f"{distance or _distance_sql(spec, lon, lat)} <= {_d(buffer_m)}"
+    if bbox is not None:
+        sql = f"({sql}) AND {_distance_sql(bbox, lon, lat)} <= 0D"
+    return sql
 
 
 def make_distance_udf(spec: "_geo.GeomSpec", spheroid: bool = False):

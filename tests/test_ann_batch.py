@@ -340,15 +340,12 @@ def test_zero_norm_vectors_rank_last_with_null_cosine(spark, zero_emb,
     qvecs = [ANN.query_vector(64, s) for s in (7, 8, 9)]
     ivf = str(tmp_path / "ivf")
     ANN.write_ivf_table(zero_emb, ivf, cents)
-    # pq_encode cannot encode a zero vector (its unit normalization divides
-    # by the norm), so the zero rows join the IVF-PQ layout with code 0
+    # pq_encode gives a zero vector NULL codes, the whole corpus encodes
+    codes = {r.vec_id: r.codes for r in ANN.pq_encode(zero_emb).collect()}
+    assert all(c is not None and (vid % 4 == 1) == all(x is None for x in c)
+               for vid, c in codes.items())
     ivfpq = str(tmp_path / "ivfpq")
-    ANN.write_ivfpq_table(zero_emb.filter(F.col("vec_id") % 4 != 1), ivfpq,
-                          cents)
-    (zero_emb.filter(F.col("vec_id") % 4 == 1)
-     .withColumn("ivf_cell", ANN.ivf_assign_col(F.col("embedding"), cents))
-     .withColumn("codes", F.array_repeat(F.lit(0), 8))
-     .write.mode("append").partitionBy("ivf_cell").parquet(ivfpq))
+    ANN.write_ivfpq_table(zero_emb, ivfpq, cents)
 
     single = {
         "brute_topk": lambda q: ANN.brute_topk(zero_emb, q, k),
@@ -358,11 +355,20 @@ def test_zero_norm_vectors_rank_last_with_null_cosine(spark, zero_emb,
                                                        nprobe=4),
         "ivfpq_topk_table": lambda q: ANN.ivfpq_topk_table(
             spark, ivfpq, q, k, nprobe=4, shortlist=2),
+        "ivfpq_topk": lambda q: ANN.ivfpq_topk(zero_emb, q, k, cents,
+                                               nprobe=4, shortlist=2),
     }
     for name, fn in single.items():
         for q in qvecs:
             got = [(r.vec_id, r.cosine) for r in fn(q).collect()]
             assert got == _oracle_topk(rows, q, k), name
+
+    # the ADC-only ranking puts the NULL-scored zero vectors last too
+    for q in qvecs:
+        adc = ANN.pq_topk(zero_emb, q, 24).collect()
+        assert [r.vec_id for r in adc[-6:]] == [1, 5, 9, 13, 17, 21]
+        assert all(r.adc is None for r in adc[-6:])
+        assert all(r.adc is not None for r in adc[:-6])
 
     qdf = spark.createDataFrame(
         [(i, [float(x) for x in q]) for i, q in enumerate(qvecs)],

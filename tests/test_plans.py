@@ -255,8 +255,7 @@ def test_dateline_prefilter_lon_disjunction_pushes(spark, fixture_paths):
     spec = geo.bbox_spec(179.9, 52.0, -179.9, 53.0)
     cq = CompiledQuery(refine_spec=spec, refine_buffer=0.0,
                        refine_bbox=None, distance_spec=spec)
-    out = eng._prefilter(eng._df.select("image_id", "lon", "lat", "cell", "pcell"), cq)
-    plan = _plan(out)
+    plan = _plan(eng.pois_df({"request": "pois"}, cq))
     pushed = plan.split("PushedFilters")[1][:400]
     assert "Or(GreaterThanOrEqual(lon,179.9)" in pushed.replace(" ", "")
 
@@ -270,3 +269,53 @@ def test_isin_expr_empty_list_is_total(spark):
     df = spark.range(5).filter(isin_expr("id", []))
     assert df.count() == 0
     assert spark.range(5).filter(isin_expr("id", [1, 3])).count() == 2
+
+
+def _count_py4j(spark, build) -> int:
+    """py4j round trips (gateway client send_command calls) made by
+    `build()`.  Memory-delete commands are not counted: py4j sends one
+    whenever Python's garbage collector frees an earlier JVM object
+    reference, whichever call happens to be running."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(command, *a, **kw):
+        nonlocal n
+        n += not command.startswith("m\nd\n")
+        return send(command, *a, **kw)
+
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        del client.send_command
+    return n
+
+
+def test_request_build_is_one_statement(spark, engine, monkeypatch):
+    """Building a pois_df or stats_df is one spark.sql call and a handful of
+    py4j round trips, not one eager analysis per DataFrame step (the
+    DataFrame-chain build made 270-330 per request)."""
+    from openpoiservice_spark import fixtures
+
+    sql_calls = []
+    sql = type(spark).sql
+    monkeypatch.setattr(type(spark), "sql", lambda self, *a, **kw: (
+        sql_calls.append(a[0]), sql(self, *a, **kw))[1])
+    geometries = [
+        {"geojson": {"type": "Point", "coordinates": [8.8075, 53.0753]}, "buffer": 50},
+        {"geojson": {"type": "LineString", "coordinates": fixtures.LINESTRING}, "buffer": 10},
+        {"geojson": {"type": "Polygon", "coordinates": [fixtures.POLYGON]}, "buffer": 0},
+        {"bbox": [[8.807054, 53.075024], [8.807533, 53.075363]], "buffer": 20},
+    ]
+    payloads = [{"request": "pois", "geometry": g} for g in geometries]
+    payloads.append({"request": "pois", "geometry": geometries[0],
+                      "filters": {"category_ids": [564, 108]}})
+    for payload in payloads:
+        for build in (engine.pois_df, engine.stats_df):
+            build(payload)  # warm: first-use class loading is not per request
+            del sql_calls[:]
+            n = _count_py4j(spark, lambda: build(payload))
+            assert len(sql_calls) == 1, (build.__name__, payload)
+            assert n <= 25, (build.__name__, payload, n)

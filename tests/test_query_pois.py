@@ -174,6 +174,43 @@ def test_geojson_without_buffer_is_legal(engine):
     assert fc["type"] == "FeatureCollection"
 
 
+_NAN, _INF = float("nan"), float("inf")
+
+
+def _poly_with(x):
+    ring = [list(c) for c in fixtures.POLYGON]
+    ring[1][0] = x
+    return [ring]
+
+
+@pytest.mark.parametrize("geometry, code", [
+    ({"bbox": [[_NAN, 53.07], [8.81, 53.08]]}, 4007),
+    ({"bbox": [[8.80, 53.07], [8.81, _INF]]}, 4007),
+    ({"bbox": [[-_INF, 53.07], [8.81, 53.08]], "buffer": 10}, 4007),
+    ({"geojson": {"type": "Point", "coordinates": [_NAN, P[1]]}, "buffer": 50}, 4007),
+    ({"geojson": {"type": "LineString", "coordinates": [LINE[0], [P[0], _INF]]}}, 4007),
+    ({"geojson": {"type": "Polygon", "coordinates": _poly_with(_NAN)}}, 4007),
+    ({"geojson": {"type": "Point", "coordinates": P}, "buffer": _NAN}, 4000),
+    ({"geojson": {"type": "Point", "coordinates": P}, "buffer": _INF}, 4000),
+    ({"bbox": BBOX1, "buffer": -_INF}, 4000),
+    ({"bbox": BBOX1, "buffer": [5]}, 4000),
+])
+def test_non_finite_numbers_rejected(engine, tmp_path, monkeypatch, geometry, code):
+    """NaN fails no admission comparison: a non-finite coordinate or bbox
+    corner (4007), or a non-finite or non-numeric buffer (4000), is an API
+    error raised while compiling the geometry, and logged like every
+    rejection."""
+    log = str(tmp_path / "invalid.log")
+    monkeypatch.setattr(engine, "invalid_log", log)
+    for req in ("pois", "stats"):
+        with pytest.raises(InvalidUsage) as e:
+            engine.request({"request": req, "geometry": geometry})
+        assert e.value.error_code == code
+    with open(log) as f:
+        lines = f.read().strip().splitlines()
+    assert len(lines) == 2 and all(f" {code} " in line for line in lines)
+
+
 def test_negative_buffer_rejected(engine):
     with pytest.raises(InvalidUsage) as e:
         _pois(engine, {"geojson": {"type": "Point", "coordinates": P}, "buffer": -5})
@@ -235,6 +272,43 @@ def test_two_custom_filters_conjunctive_zero_rows(engine):
     fc = _pois(engine, {"geojson": {"type": "Point", "coordinates": P}, "buffer": 400},
                filters={"fee": ["yes"], "smoking": ["no"]})
     assert fc["features"] == []
+
+
+@pytest.mark.parametrize("value", ["'", "\\", "--", "') OR (true", "yes' OR '1'='1"])
+def test_custom_filter_values_are_not_sql(engine, value):
+    """Custom-filter values reach Spark as parameter markers, never as SQL
+    text: quotes, a backslash, comment dashes and injection attempts each
+    return exactly the numpy oracle's rows (none for the value alone) and
+    raise no parse error."""
+    import numpy as np
+
+    from openpoiservice_spark import geo
+
+    rows = engine._df.select("osm_id", "lon", "lat", "tags").collect()
+    inside = geo.GeomSpec("point", [P]).within_m(
+        np.array([r.lon for r in rows]), np.array([r.lat for r in rows]), 400.0)
+    geometry = {"geojson": {"type": "Point", "coordinates": P}, "buffer": 400}
+    for vals in ([value], ["yes", value]):
+        fc = _pois(engine, geometry, filters={"wheelchair": vals})
+        want = sorted(r.osm_id for r, ok in zip(rows, inside)
+                      if ok and (r.tags or {}).get("wheelchair") in vals)
+        assert sorted(f["properties"]["osm_id"] for f in fc["features"]) == want
+        assert bool(want) == ("yes" in vals)
+
+
+def test_category_ids_are_int_cast(engine):
+    """Category ids enter the statement int()-cast: a numeric string is its
+    integer, anything else is a schema error (4000), never SQL text."""
+    geometry = {"geojson": {"type": "Point", "coordinates": P}, "buffer": 220}
+    ids = [f["properties"]["osm_id"] for f in
+           _pois(engine, geometry, filters={"category_ids": [564]})["features"]]
+    assert ids and ids == [f["properties"]["osm_id"] for f in _pois(
+        engine, geometry, filters={"category_ids": ["564"]})["features"]]
+    for req in ("pois", "stats"):
+        with pytest.raises(InvalidUsage) as e:
+            engine.request({"request": req, "geometry": geometry,
+                            "filters": {"category_ids": ["564) OR (true"]}})
+        assert e.value.error_code == 4000
 
 
 def test_category_group_filter(engine):
