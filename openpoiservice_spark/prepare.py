@@ -6,31 +6,38 @@ imposm passes + hand-rolled hash join + buffered bulk insert collapse into a
 single DataFrame job:
 
     scan(raw) -> decode phash (native bit math) -> parse caption + derive
-    categories (one pandas UDF) -> drop category-less rows
+    categories (native expressions) -> drop category-less rows
     (reference parse_osm.py:347) -> derive cell/pcell keys -> salted
     repartition -> write partitioned by pcell, sorted by cell -> lineage rows.
 
-Prepared layout on disk (plain Parquet; swap the writer for Iceberg
-`writeTo(...).append()` on a cluster with the runtime jar — the layout keeps
-the same logical contract: partition key `pcell`, sort key `cell`):
+Prepared layout on disk (plain Parquet data plus a JSON commit log; swap
+the writer for Iceberg `writeTo(...).append()` on a cluster with the runtime
+jar — the layout keeps the same logical contract: partition key `pcell`,
+sort key `cell`):
 
     <prepared>/data/pcell=<id>/*.parquet
-    <prepared>/lineage/*.parquet     (append-only commit log)
+    <prepared>/lineage/<ms>-<id>.json   (commit log: one file per commit)
 
-Lineage rows (north_rule requirement: per-partition lineage + metrics) carry
-(run_id, op, fingerprint, pcell, n_rows, approx_bytes, wall_ms, status, ts).
-A re-run with `resume=True` anti-joins input pcells against committed
-lineage rows and processes only the gap — the partition-granular lift of the
-reference's file-mtime checkpoint log (reference manage.py:75-94,
-parser.py:178-199).
+Lineage rows (per-partition lineage + metrics) carry (run_id, op,
+fingerprint, pcell, n_rows, approx_bytes, wall_ms, status, ts).  Like the
+reference's import checkpoint log (one JSON file the importer reads and
+writes, reference manage.py:75-94) and Delta Lake's `_delta_log`, the log
+is table metadata kept on the driver: each commit writes one small JSON file
+through the Hadoop FileSystem inside the commit lock, and readers list the
+directory, so no commit and no engine open starts a Spark job for it.  A
+re-run with `resume=True` skips input pcells already committed for the same
+fingerprint and processes only the gap — the partition-granular lift of the
+reference's file-mtime checkpoint log (parser.py:178-199).
 """
 
 from __future__ import annotations
 
+import json
 import time
 import uuid
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,8 +66,7 @@ def derive(raw: DataFrame) -> DataFrame:
     lon, lat = lonlat_from_phash()
     df = raw.withColumns({"lon": lon, "lat": lat})
     # caption parse + taxonomy lookup as NATIVE expressions (functions.
-    # caption_attrs_columns): the import hot loop has ZERO Python — the
-    # round-1 pandas UDF cost ~6 us/row of per-row Python
+    # caption_attrs_columns): the import hot loop has ZERO Python
     df = df.withColumns(caption_attrs_columns())
     df = df.select(
         "image_id", "bytes", "w", "h", "fmt", "caption", "phash", "lon", "lat",
@@ -90,10 +96,8 @@ def _hadoop_fs(spark: SparkSession, path_str: str):
 
 def read_sidecar_text(spark: SparkSession, path_str: str) -> str | None:
     """Small sidecar file (JSON manifests, codebooks, band params) -> str,
-    or None if absent.  Buffered line reads: ONE py4j round-trip per line
-    instead of one per byte — the former stream.read() loop cost ~20k JVM
-    round-trips for a ~20 KB codebook, paid by every table reader (round-6
-    ADVICE).  Newlines are normalized to \\n, irrelevant for the JSON
+    or None if absent.  Buffered line reads: one py4j round trip per line,
+    not per byte.  Newlines are normalized to \\n, irrelevant for the JSON
     payloads every caller parses."""
     fs, p = _hadoop_fs(spark, path_str)
     if not fs.exists(p):
@@ -121,10 +125,10 @@ LOCK_STALE_TTL_S = 60.0
 
 
 def _write_owner(fs, p, owner: str) -> None:
-    """Stamp the holder's unique owner token into the lock file (round-5
-    ADVICE: an unowned lock let a swept-but-alive writer's finally-delete
-    remove the NEW holder's lock).  Overwrite is safe: only the holder that
-    just won createNewFile calls this."""
+    """Stamp the holder's unique owner token into the lock file, so a
+    swept-but-alive writer's release never removes the new holder's lock.
+    Overwrite is safe: only the holder that just created the file calls
+    this."""
     out = fs.create(p, True)
     try:
         out.write(bytearray(owner.encode("ascii")))
@@ -152,9 +156,9 @@ class _Heartbeat:
     (a multi-minute dynamic-partition rewrite) stay visibly alive however
     long they run; only a crashed writer's lock goes stale.
 
-    Transient refresh failures RETRY every tick (round-5 ADVICE: a single
-    failed setTimes must not silently stop the liveness signal — that is
-    exactly how a slow-but-alive writer gets swept); only after a full TTL
+    Transient refresh failures RETRY every tick (a single failed setTimes
+    must not silently stop the liveness signal — that is how a
+    slow-but-alive writer would get swept); only after a full TTL
     of consecutive failures — by which point the lock may legitimately have
     been swept — does the thread give up and flag `lost`.  `lost` is also
     set the moment the lock file vanishes or carries another writer's owner
@@ -198,11 +202,11 @@ class _Heartbeat:
 
 
 def _sweep_if_stale(fs, p, stale_ttl_s: float) -> bool:
-    """Dead-writer recovery (round-4 verdict item 4): a lock whose mtime is
-    older than the TTL belongs to a crashed writer (live ones heartbeat).
-    Takeover is race-safe via atomic RENAME to a unique tombstone — when
-    two waiters sweep concurrently only one rename succeeds, the loser just
-    re-polls; nobody deletes a lock another waiter already re-acquired."""
+    """Dead-writer recovery: a lock whose mtime is older than the TTL
+    belongs to a crashed writer (live ones heartbeat).  Takeover is
+    race-safe via atomic RENAME to a unique tombstone — when two waiters
+    sweep concurrently only one rename succeeds, the loser just re-polls;
+    nobody deletes a lock another waiter already re-acquired."""
     try:
         st = fs.getFileStatus(p)
     except Exception:  # noqa: BLE001 — lock vanished: holder released it
@@ -220,45 +224,69 @@ def _sweep_if_stale(fs, p, stale_ttl_s: float) -> bool:
     return False
 
 
+def _create_exclusive(spark: SparkSession, fs, p) -> bool:
+    """Create the lock file if it does not exist; True iff this call
+    created it.  Hadoop's `createNewFile` checks existence, then creates,
+    and on the local file system that create is not exclusive: two racing
+    writers can both win, or the loser gets an error.  Local paths are
+    therefore created with java.nio's `Files.createFile` (CREATE_NEW, one
+    atomic call); other schemes keep `createNewFile` (HDFS checks and
+    creates at the NameNode).  An already-exists error means "not
+    acquired"."""
+    jvm = spark.sparkContext._jvm
+    try:
+        if fs.getScheme() != "file":
+            return fs.createNewFile(p)
+        attrs = spark.sparkContext._gateway.new_array(
+            jvm.java.nio.file.attribute.FileAttribute, 0)
+        jvm.java.nio.file.Files.createFile(
+            jvm.java.nio.file.Paths.get(fs.makeQualified(p).toUri()), attrs)
+        return True
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getSimpleName() == "FileAlreadyExistsException":
+            return False
+        raise
+
+
 @contextmanager
 def commit_lock(spark: SparkSession, prepared_dir: str,
                 timeout_s: float = 120.0, poll_s: float = 0.25,
                 stale_ttl_s: float = LOCK_STALE_TTL_S,
                 heartbeat_s: float = LOCK_HEARTBEAT_S):
-    """Single-writer fencing for the prepared table (round-3 verdict item 3;
-    dead-writer recovery round-4 item 4).
+    """Single-writer fencing for the prepared table, with dead-writer
+    recovery.
 
-    Every mutation (import, merge, stream micro-batch) runs its WHOLE
-    read-compute-write-commit cycle under this lock, so concurrent writers
-    serialize instead of silently losing updates: a merge snapshots the
-    table, rewrites pcell directories via dynamic partition overwrite, and
-    appends lineage — unfenced, a second merge computed from the same
+    Every mutation (import, merge, compact, stream micro-batch) runs its
+    WHOLE read-compute-write-commit cycle under this lock, so concurrent
+    writers serialize instead of silently losing updates: a merge snapshots
+    the table, rewrites pcell directories via dynamic partition overwrite,
+    and commits lineage — unfenced, a second merge computed from the same
     snapshot would overwrite the first's rewrite (lost update), and a
     stream append landing between a merge's read and write would be wiped
     by the directory overwrite.
 
-    Mechanism: atomic `FileSystem.createNewFile` on `<prepared>/_commit.lock`
-    — atomic on local FS and HDFS (the rename-based stores Iceberg also
-    relies on for its commit).  The winner stamps a unique OWNER TOKEN into
-    the lock file.  Liveness: the holder HEARTBEATS the lock mtime every
+    Mechanism: an exclusive create of `<prepared>/_commit.lock`
+    (`_create_exclusive`: O_EXCL on the local file system, the NameNode's
+    create on HDFS).  The winner stamps a unique OWNER TOKEN into the lock
+    file.  Liveness: the holder HEARTBEATS the lock mtime every
     `heartbeat_s` (transient failures retry every tick; only a full TTL of
     consecutive failures gives up); a waiter finding the mtime older than
     `stale_ttl_s` sweeps the dead writer's lock via atomic rename-to-
     tombstone and proceeds — no operator intervention, no TTL race between
-    sweepers (only one rename wins).  Fencing on usurpation (round-5
-    ADVICE): release deletes the lock ONLY if it still carries this
-    holder's token, so a swept-then-released writer never removes the new
-    holder's lock; a holder that lost ownership mid-mutation raises
-    CommitConflict on exit (long mutations may poll the yielded heartbeat's
-    `lost` event to abort earlier).  On S3-class stores without atomic
-    create/rename, swap the table for a real Iceberg catalog commit
-    (SURVEY.md §1.3 — the layout is Iceberg-pluggable by design)."""
+    sweepers (only one rename wins).  Fencing on usurpation: release
+    deletes the lock ONLY if it still carries this holder's token, so a
+    swept-then-released writer never removes the new holder's lock; a
+    holder that lost ownership mid-mutation raises CommitConflict on exit
+    (long mutations may poll the yielded heartbeat's `lost` event to abort
+    earlier).  On S3-class stores without atomic create/rename, swap the
+    table for a real Iceberg catalog commit (SURVEY.md §1.3 — the layout is
+    Iceberg-pluggable by design)."""
     fs, p = _hadoop_fs(spark, f"{prepared_dir}/_commit.lock")
     jvm = spark.sparkContext._jvm
     fs.mkdirs(p.getParent())
     owner = uuid.uuid4().hex
     deadline = time.time() + timeout_s
-    while not fs.createNewFile(p):
+    while not _create_exclusive(spark, fs, p):
         if _sweep_if_stale(fs, p, stale_ttl_s):
             continue  # dead writer recovered — retry the atomic create now
         if time.time() > deadline:
@@ -286,16 +314,67 @@ def commit_lock(spark: SparkSession, prepared_dir: str,
             pass           # sweeper reclaims an undeleted lock
 
 
-
 def data_path(prepared_dir: str) -> str:
     return f"{prepared_dir}/data"
 
 
-def read_lineage(spark: SparkSession, prepared_dir: str) -> DataFrame | None:
+#: one lineage row; `read_lineage` gives the commit log this schema
+LINEAGE_SCHEMA = ("run_id string, op string, fingerprint string, pcell long, "
+                  "n_rows long, approx_bytes long, wall_ms long, status string, "
+                  "ts double")
+_LINEAGE_FIELDS = tuple(f.split()[0] for f in LINEAGE_SCHEMA.split(", "))
+
+
+def lineage_rows(spark: SparkSession, prepared_dir: str) -> list[dict]:
+    """Every lineage row of the table's commit log, as plain dicts.
+
+    The log is `<prepared>/lineage/`, one small JSON file per commit; an
+    open lists the directory and reads each file on the driver through the
+    Hadoop FileSystem, so it starts no Spark job.  Names starting with `_`
+    or `.` are skipped: a commit being written (`_append_lineage` renames
+    it into place once closed) and checksum files."""
+    fs, d = _hadoop_fs(spark, _lineage_path(prepared_dir))
+    if not fs.exists(d):
+        return []
+    rows: list[dict] = []
+    for name in sorted(st.getPath().getName() for st in fs.listStatus(d)):
+        if name.startswith(("_", ".")):
+            continue
+        rows.extend(json.loads(read_sidecar_text(spark, f"{d}/{name}") or "[]"))
+    return rows
+
+
+def _append_lineage(spark: SparkSession, prepared_dir: str, rows: list[dict]) -> None:
+    """Commit `rows` to the lineage log as one JSON file, written by the
+    driver (no Spark job; callers hold the commit lock).  The file is
+    created under a `_`-prefixed name, which every reader skips, and
+    renamed into place once closed, so readers see all of a commit's rows
+    or none."""
+    if not rows:
+        return
+    jvm = spark.sparkContext._jvm
+    fs, d = _hadoop_fs(spark, _lineage_path(prepared_dir))
+    fs.mkdirs(d)
+    name = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:12]}.json"
+    tmp = jvm.org.apache.hadoop.fs.Path(d, "_" + name)
+    out = fs.create(tmp, False)
     try:
-        return spark.read.parquet(_lineage_path(prepared_dir))
-    except Exception:
+        out.write(bytearray(json.dumps(
+            [{k: r[k] for k in _LINEAGE_FIELDS} for r in rows]).encode()))
+    finally:
+        out.close()
+    if not fs.rename(tmp, jvm.org.apache.hadoop.fs.Path(d, name)):
+        raise OSError(f"could not commit lineage file {d}/{name}")
+
+
+def read_lineage(spark: SparkSession, prepared_dir: str) -> DataFrame | None:
+    """The commit log as a DataFrame (LINEAGE_SCHEMA), or None when the
+    table has no commits yet."""
+    rows = lineage_rows(spark, prepared_dir)
+    if not rows:
         return None
+    return spark.createDataFrame(
+        [tuple(r[k] for k in _LINEAGE_FIELDS) for r in rows], LINEAGE_SCHEMA)
 
 
 def load_pcell_stats(spark: SparkSession, prepared_dir: str) -> dict[int, int]:
@@ -303,63 +382,39 @@ def load_pcell_stats(spark: SparkSession, prepared_dir: str) -> dict[int, int]:
     statistics the reference's PostGIS ANALYZE supplied implicitly (and
     whose absence cost it 33x, reference misc.sql:113-143).
 
-    import/merge rows carry the pcell TOTAL after the run (merge dynamically
-    overwrites whole pcells); stream rows carry per-BATCH appended deltas —
-    so the live count is the latest snapshot plus every stream delta
-    committed after it, not max_by alone (which would collapse to the last
-    batch's count after streamed appends).  One bounded collect (commit-log
-    scale: O(runs x pcells))."""
-    lin = read_lineage(spark, prepared_dir)
-    if lin is None:
-        return {}
-    rows = (
-        lin.filter(F.col("status") == "committed")
-        .groupBy("pcell")
-        .agg(
-            F.expr(
-                "max_by(struct(n_rows, ts), ts) FILTER (WHERE op <> 'stream')"
-            ).alias("snap"),
-            F.expr(
-                "collect_list(struct(n_rows, ts)) FILTER (WHERE op = 'stream')"
-            ).alias("deltas"),
-        )
-        .collect()
-    )
+    import/merge/compact rows carry the pcell TOTAL after the run (merge
+    dynamically overwrites whole pcells); stream rows carry per-BATCH
+    appended deltas — so the live count is the latest snapshot plus every
+    stream delta committed after it.  Plain Python over `lineage_rows`."""
+    snap: dict[int, tuple[float, int]] = {}
+    deltas: dict[int, list[tuple[float, int]]] = {}
+    for r in lineage_rows(spark, prepared_dir):
+        if r["status"] != "committed":
+            continue
+        pc, ts, n = int(r["pcell"]), float(r["ts"]), int(r["n_rows"])
+        if r["op"] == "stream":
+            deltas.setdefault(pc, []).append((ts, n))
+        elif pc not in snap or ts > snap[pc][0]:
+            snap[pc] = (ts, n)
     out: dict[int, int] = {}
-    for r in rows:
-        base = int(r.snap.n_rows) if r.snap is not None else 0
-        base_ts = float(r.snap.ts) if r.snap is not None else float("-inf")
-        out[int(r.pcell)] = base + sum(
-            int(d.n_rows) for d in (r.deltas or []) if float(d.ts) > base_ts
-        )
+    for pc in snap.keys() | deltas.keys():
+        base_ts, base = snap.get(pc, (float("-inf"), 0))
+        out[pc] = base + sum(n for ts, n in deltas.get(pc, ()) if ts > base_ts)
     return out
 
 
 def committed_pcells(spark: SparkSession, prepared_dir: str, fingerprint: str) -> set[int]:
-    lin = read_lineage(spark, prepared_dir)
-    if lin is None:
-        return set()
-    rows = (
-        lin.filter((F.col("status") == "committed") & (F.col("fingerprint") == fingerprint))
-        .select("pcell").distinct().collect()
-    )
-    return {r.pcell for r in rows}
-
-
-def _append_lineage(spark: SparkSession, prepared_dir: str, rows: list[dict]) -> None:
-    if not rows:
-        return
-    schema = "run_id string, op string, fingerprint string, pcell long, n_rows long, approx_bytes long, wall_ms long, status string, ts double"
-    spark.createDataFrame([tuple(r.values()) for r in rows], schema=schema) \
-        .coalesce(1).write.mode("append").parquet(_lineage_path(prepared_dir))
+    return {int(r["pcell"]) for r in lineage_rows(spark, prepared_dir)
+            if r["status"] == "committed" and r["fingerprint"] == fingerprint}
 
 
 def _salt_factors(spark: SparkSession, raw: DataFrame, skipped: set[int]):
-    """Per-pcell salt factor column: ceil(rows / SALT_TARGET_ROWS), clamped
-    to [WRITE_SALT, SALT_MAX].  Derived from phash alone (native bit math;
-    single-column scan), so the sizing pass costs a fraction of the import.
-    The same statistics land in the lineage table, closing the loop the
-    reference's import log never had."""
+    """(per-pcell salt factor column, pcells the run writes).  The factor
+    is ceil(rows / SALT_TARGET_ROWS), clamped to [WRITE_SALT, SALT_MAX].
+    Derived from phash alone (native bit math; single-column scan), so the
+    sizing pass costs a fraction of the import; its pcells (those of the
+    raw rows, minus `skipped`) bound the import's post-write lineage
+    count."""
     lon, lat = lonlat_from_phash()
     cell = cell_expr(lon, lat, ROW_RES)
     pcell = cell_parent_expr(cell, ROW_RES, PART_RES)
@@ -372,7 +427,7 @@ def _salt_factors(spark: SparkSession, raw: DataFrame, skipped: set[int]):
         factors[int(r.pcell)] = min(f, SALT_MAX)
     hot = {pc: f for pc, f in factors.items() if f != WRITE_SALT}
     if not hot:
-        return F.lit(WRITE_SALT)
+        return F.lit(WRITE_SALT), set(factors)
     # single map-literal lookup, not nested CASE WHEN chains: a planet-scale
     # table can have thousands of hot cells and per-cell whens would blow up
     # expression-tree depth/codegen
@@ -381,7 +436,7 @@ def _salt_factors(spark: SparkSession, raw: DataFrame, skipped: set[int]):
         entries.extend([F.lit(int(pc)), F.lit(int(f))])
     return F.coalesce(
         F.element_at(F.create_map(*entries), F.col("pcell")), F.lit(WRITE_SALT)
-    )
+    ), set(factors)
 
 
 def read_raw(spark: SparkSession, raw_path: str, raw_format: str = "parquet") -> DataFrame:
@@ -438,7 +493,8 @@ def _prepare_locked(spark, raw, df, prepared_dir, resume, fingerprint,
     # not a constant: dense urban cells at planet scale hold 10^5-10^6x the
     # rows of rural cells.  The writer's partitionBy reassembles the
     # directory layout regardless of task placement.
-    salt = F.pmod(F.hash("osm_id"), _salt_factors(spark, raw, skipped))
+    factors, written = _salt_factors(spark, raw, skipped)
+    salt = F.pmod(F.hash("osm_id"), factors)
     n_shuffle = max(int(spark.conf.get("spark.sql.shuffle.partitions")), WRITE_SALT)
     out = (
         df.repartition(n_shuffle, F.col("pcell"), salt)
@@ -461,21 +517,22 @@ def _prepare_locked(spark, raw, df, prepared_dir, resume, fingerprint,
         .parquet(data_path(prepared_dir))
     )
 
-    # lineage: per-pcell metrics from a pruned re-scan (reads only the
-    # lightweight columns via Parquet column projection)
+    # lineage: per-pcell metrics from a re-scan of only the pcells this run
+    # wrote (partition pruning) and only the lightweight columns
     stats = (
         spark.read.parquet(data_path(prepared_dir))
+        .filter(F.col("pcell").isin(sorted(written)))
         .groupBy("pcell")
         .agg(F.count("*").alias("n_rows"), F.sum(F.length("caption")).alias("approx_bytes"))
         .collect()
-    )
+    ) if written else []
     wall_ms = int((time.time() - t0) * 1000)
     ts = time.time()
     rows = [
         dict(run_id=run_id, op="import", fingerprint=fingerprint, pcell=int(r.pcell),
              n_rows=int(r.n_rows), approx_bytes=int(r.approx_bytes or 0),
              wall_ms=wall_ms, status="committed", ts=ts)
-        for r in stats if int(r.pcell) not in skipped
+        for r in stats
     ]
     _append_lineage(spark, prepared_dir, rows)
     total_rows = sum(r["n_rows"] for r in rows)
@@ -529,8 +586,9 @@ def _compact_locked(spark, prepared_dir, min_files, target_pcells,
     sliced = read_prepared(spark, prepared_dir).filter(
         F.col("pcell").isin(affected)).cache()
     # materialize BEFORE the overwrite: the rewrite reads the directories it
-    # replaces (same discipline as _merge_locked)
-    n_rows = sliced.count()
+    # replaces (same discipline as _merge_locked); the per-pcell counts of
+    # the cached slice are the lineage snapshot, so nothing is re-read
+    counts = _pcell_counts(sliced)
     (
         sliced.repartition(len(affected), F.col("pcell"))
         .sortWithinPartitions("pcell", "cell")
@@ -542,12 +600,6 @@ def _compact_locked(spark, prepared_dir, min_files, target_pcells,
         .parquet(data_path(prepared_dir))
     )
     sliced.unpersist()
-    stats = (
-        spark.read.parquet(data_path(prepared_dir))
-        .filter(F.col("pcell").isin(affected))
-        .groupBy("pcell").agg(F.count("*").alias("n_rows"))
-        .collect()
-    )
     after = 0
     for pc in affected:
         sub = fs.listStatus(
@@ -558,12 +610,12 @@ def _compact_locked(spark, prepared_dir, min_files, target_pcells,
     ts = time.time()
     _append_lineage(spark, prepared_dir, [
         dict(run_id=run_id, op="compact", fingerprint="compact",
-             pcell=int(r.pcell), n_rows=int(r.n_rows), approx_bytes=0,
+             pcell=pc, n_rows=n, approx_bytes=0,
              wall_ms=wall_ms, status="committed", ts=ts)
-        for r in stats
+        for pc, n in counts.items()
     ])
     return {"pcells": len(affected), "files_before": sum(cand.values()),
-            "files_after": after, "rows": n_rows, "run_id": run_id}
+            "files_after": after, "rows": sum(counts.values()), "run_id": run_id}
 
 
 def merge(spark: SparkSession, prepared_dir: str, upserts_raw: DataFrame,
@@ -582,35 +634,38 @@ def merge(spark: SparkSession, prepared_dir: str, upserts_raw: DataFrame,
     # the WHOLE read-compute-write cycle is fenced: the affected-pcell scan
     # and the slice read must see the table state the overwrite will replace
     with commit_lock(spark, prepared_dir):
-        return _merge_locked(spark, prepared_dir, ups, delete_keys, run_id, t0)
+        try:
+            return _merge_locked(spark, prepared_dir, ups, delete_keys, run_id, t0)
+        finally:
+            ups.unpersist()
+
+
+def _pcell_counts(df: DataFrame) -> dict[int, int]:
+    """Rows per pcell of `df`, in pcell order (one collect)."""
+    return dict(sorted((int(r.pcell), int(r["count"]))
+                       for r in df.groupBy("pcell").count().collect()))
 
 
 def _merge_locked(spark, prepared_dir, ups, delete_keys, run_id, t0) -> dict:
     cur = read_prepared(spark, prepared_dir)
-
-    # affected partitions: pcells receiving upserts, pcells CURRENTLY holding
-    # the upserted PKs (an upsert may move a row across pcells — the old
-    # partition must be rewritten too or the stale row survives, breaking the
-    # PK contract of the reference's delete-then-reinsert,
-    # parse_osm.py:411-419), and pcells holding deletes
-    up_pcells = {r.pcell for r in ups.select("pcell").distinct().collect()}
-    up_pcells |= {
-        r.pcell
-        for r in cur.join(F.broadcast(ups.select("osm_type", "osm_id")),
-                          ["osm_type", "osm_id"], "left_semi")
-        .select("pcell").distinct().collect()
-    }
+    keys = ups.select("osm_type", "osm_id")
+    del_df = None
     if delete_keys:
         del_df = spark.createDataFrame(delete_keys, "osm_type int, osm_id long")
-        del_pcells = {
-            r.pcell
-            for r in cur.join(F.broadcast(del_df), ["osm_type", "osm_id"], "left_semi")
-            .select("pcell").distinct().collect()
-        }
-    else:
-        del_df = None
-        del_pcells = set()
-    affected = sorted(up_pcells | del_pcells)
+        keys = keys.unionByName(del_df)
+
+    # affected partitions, in one query: pcells receiving upserts, plus
+    # pcells CURRENTLY holding an upserted or deleted PK (an upsert may move
+    # a row across pcells — the old partition must be rewritten too or the
+    # stale row survives, breaking the PK contract of the reference's
+    # delete-then-reinsert, parse_osm.py:411-419).  Collected without a
+    # distinct (no shuffle): at most two rows per upserted key and one per
+    # deleted key, the scale of the keys the broadcast already collects
+    held = cur.join(F.broadcast(keys), ["osm_type", "osm_id"], "left_semi")
+    affected = sorted({
+        int(r.pcell) for r in
+        ups.select("pcell").union(held.select("pcell")).collect()
+    })
     if not affected:
         return {"pcells": 0, "rows": 0, "run_id": run_id}
 
@@ -625,8 +680,10 @@ def _merge_locked(spark, prepared_dir, ups, delete_keys, run_id, t0) -> dict:
         merged = merged.join(F.broadcast(del_df), ["osm_type", "osm_id"], "left_anti")
     merged = merged.unionByName(ups.filter(F.col("pcell").isin(affected)))
 
+    # per-pcell counts of the cached merged rows: the lineage snapshot of
+    # every rewritten pcell, and (by absence) the pcells emptied by deletes
     merged = merged.cache()
-    remaining_pcells = {r.pcell for r in merged.select("pcell").distinct().collect()}
+    counts = _pcell_counts(merged)
     (
         merged.repartition(max(len(affected), 1), F.col("pcell"))
         .sortWithinPartitions("pcell", "cell")
@@ -640,29 +697,16 @@ def _merge_locked(spark, prepared_dir, ups, delete_keys, run_id, t0) -> dict:
     merged.unpersist()
     # dynamic overwrite only rewrites directories that receive rows; a pcell
     # fully emptied by deletes must be dropped explicitly
-    emptied = set(affected) - remaining_pcells
-    if emptied:
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        conf = jsc.hadoopConfiguration()
-        for pc in emptied:
-            p = jvm.org.apache.hadoop.fs.Path(f"{data_path(prepared_dir)}/pcell={pc}")
-            fs = p.getFileSystem(conf)
-            fs.delete(p, True)
+    for pc in set(affected) - counts.keys():
+        fs, p = _hadoop_fs(spark, f"{data_path(prepared_dir)}/pcell={pc}")
+        fs.delete(p, True)
 
-    stats = (
-        spark.read.parquet(data_path(prepared_dir))
-        .filter(F.col("pcell").isin(affected))
-        .groupBy("pcell").agg(F.count("*").alias("n_rows"))
-        .collect()
-    )
     wall_ms = int((time.time() - t0) * 1000)
     ts = time.time()
     _append_lineage(spark, prepared_dir, [
-        dict(run_id=run_id, op="merge", fingerprint="merge", pcell=int(r.pcell),
-             n_rows=int(r.n_rows), approx_bytes=0, wall_ms=wall_ms,
+        dict(run_id=run_id, op="merge", fingerprint="merge", pcell=pc,
+             n_rows=n, approx_bytes=0, wall_ms=wall_ms,
              status="committed", ts=ts)
-        for r in stats
+        for pc, n in counts.items()
     ])
-    ups.unpersist()
-    return {"pcells": len(affected), "rows": sum(int(r.n_rows) for r in stats), "run_id": run_id}
+    return {"pcells": len(affected), "rows": sum(counts.values()), "run_id": run_id}

@@ -16,8 +16,8 @@ would silently corrupt each other.  With foreachBatch the prepared layout
 stays a plain parquet directory readable/writable by both paths.
 
 Delivery semantics: the streaming checkpoint makes each micro-batch
-at-least-once; replays are dropped by consulting the lineage table for the
-batch's fingerprint before writing (the standard idempotent-foreachBatch
+at-least-once; replays are dropped by consulting the lineage commit log for
+the batch's fingerprint before writing (the standard idempotent-foreachBatch
 recipe).  The commit window (files written, lineage append lost to a crash)
 can duplicate one batch — a transactional table format (Iceberg/Delta)
 closes it on a real cluster; the lineage fingerprint keeps re-RUNS (the
@@ -57,13 +57,8 @@ def _batch_fingerprint(checkpoint_dir: str, batch_id: int) -> str:
 
 
 def _batch_already_committed(spark: SparkSession, prepared_dir: str, fp: str) -> bool:
-    lin = prepare.read_lineage(spark, prepared_dir)
-    if lin is None:
-        return False
-    return (
-        lin.filter((F.col("fingerprint") == fp) & (F.col("status") == "committed"))
-        .limit(1).count() > 0
-    )
+    return any(r["fingerprint"] == fp and r["status"] == "committed"
+               for r in prepare.lineage_rows(spark, prepared_dir))
 
 
 #: lock acquisition budget for the streaming sink — generous (a large merge's

@@ -1,8 +1,9 @@
-"""Concurrent-writer fencing for the prepared table's commit protocol
-(round-3 verdict item 3): two merges racing, stream-append racing a merge,
-and the conflict/recovery path of prepare.commit_lock."""
+"""Concurrent-writer fencing for the prepared table's commit protocol: the
+lock alone under contention, two merges racing, stream-append racing a
+merge, and the conflict/recovery path of prepare.commit_lock."""
 
 import threading
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -34,6 +35,35 @@ def table(spark, tmp_path):
     fixtures.build_sf_test(raw, n_filler=300)
     prepare.prepare(spark, raw, prepared)
     return prepared
+
+
+def test_commit_lock_holders_never_overlap(spark, tmp_path):
+    """The lock alone, contended: 4 threads x 25 rounds, each recording
+    its (acquire, release) interval.  An exclusive create admits one holder
+    at a time, so no two intervals overlap and no acquisition errors."""
+    d = str(tmp_path / "locked")
+    intervals, errs = [], []
+
+    def worker():
+        try:
+            for _ in range(25):
+                with prepare.commit_lock(spark, d, timeout_s=120.0, poll_s=0.005):
+                    t0 = time.monotonic()
+                    time.sleep(0.002)
+                    intervals.append((t0, time.monotonic()))
+        except Exception as e:  # noqa: BLE001 — surfaced via assert below
+            errs.append(e)
+
+    threads = [threading.Thread(target=worker) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errs, errs
+    assert len(intervals) == 100
+    intervals.sort()
+    overlaps = [(a, b) for a, b in zip(intervals, intervals[1:]) if b[0] < a[1]]
+    assert not overlaps, overlaps
 
 
 def test_two_racing_merges_lose_nothing(spark, table, tmp_path):

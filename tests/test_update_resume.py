@@ -142,6 +142,85 @@ def test_lineage_records_metrics(spark, merge_env):
     assert merges.count() > 0
 
 
+def _lineage_row(op, pcell, n, ts, fingerprint="f"):
+    return dict(run_id="r", op=op, fingerprint=fingerprint, pcell=pcell,
+                n_rows=n, approx_bytes=0, wall_ms=0, status="committed", ts=ts)
+
+
+def test_commit_log_starts_no_spark_job(spark, tmp_path):
+    """The lineage commit log is driver-side metadata: one commit and the
+    two readers an import and an engine open use start no Spark job (the
+    job group's job ids before and after are equal; a real job in the same
+    group shows that the group does see jobs)."""
+    import uuid
+
+    d = str(tmp_path / "prepared")
+    sc = spark.sparkContext
+    group = f"commit-log-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "lineage commit log")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        prepare._append_lineage(spark, d, [_lineage_row("import", 5, 100, 1.0),
+                                           _lineage_row("stream", 5, 7, 2.0)])
+        stats = prepare.load_pcell_stats(spark, d)
+        done = prepare.committed_pcells(spark, d, "f")
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+        spark.range(3).count()
+        probe = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats == {5: 107} and done == {5}
+    assert after == before
+    assert probe != after
+
+
+def test_half_written_lineage_file_is_ignored(spark, tmp_path):
+    """A commit still being written lives under a `_`-prefixed name; every
+    reader skips it, even when its content is a truncated JSON document."""
+    from openpoiservice_spark import streaming
+
+    d = str(tmp_path / "prepared")
+    prepare._append_lineage(spark, d, [_lineage_row("import", 5, 100, 1.0)])
+    lin_dir = os.path.join(d, "lineage")
+    (committed,) = [f for f in os.listdir(lin_dir) if not f.endswith(".crc")]
+    assert committed.endswith(".json") and not committed.startswith("_")
+    with open(os.path.join(lin_dir, "_9999999999999-half.json"), "w") as f:
+        f.write('[{"run_id": "s", "op": "stream", "fingerprint": "stream:x", "pcell": 5, "n_r')
+    assert [r["pcell"] for r in prepare.lineage_rows(spark, d)] == [5]
+    assert prepare.load_pcell_stats(spark, d) == {5: 100}
+    assert prepare.committed_pcells(spark, d, "stream:x") == set()
+    assert not streaming._batch_already_committed(spark, d, "stream:x")
+    assert prepare.read_lineage(spark, d).count() == 1
+
+
+def test_lineage_counts_match_table_after_merge(spark, tmp_path_factory):
+    """Import and merge take their lineage counts from the rows they write
+    (no re-read of the table): the planner stats equal the live per-pcell
+    counts after an import and a merge with upserts and a delete."""
+    root = tmp_path_factory.mktemp("lincount")
+    raw = str(root / "raw.parquet")
+    prepared = str(root / "prepared")
+    fixtures.build_sf_test(raw, n_filler=300)
+    prepare.prepare(spark, raw, prepared)
+
+    def live():
+        return {r.pcell: r["count"] for r in
+                prepare.read_prepared(spark, prepared).groupBy("pcell").count().collect()}
+
+    assert prepare.load_pcell_stats(spark, prepared) == live()
+    ups, dels, _ = fixtures.merge_patch_frame()
+    up_path = os.path.join(str(root), "ups.parquet")
+    pq.write_table(pa.Table.from_pandas(ups, preserve_index=False), up_path)
+    out = prepare.merge(spark, prepared, spark.read.parquet(up_path),
+                        [(1, d) for d in dels])
+    now = live()
+    assert prepare.load_pcell_stats(spark, prepared) == now
+    merged = {r["pcell"]: r["n_rows"] for r in prepare.lineage_rows(spark, prepared)
+              if r["op"] == "merge"}
+    assert merged and all(now[pc] == n for pc, n in merged.items())
+    assert out["rows"] == sum(merged.values())
+
+
 def test_partition_layout_and_pruning(spark, merge_env):
     """The physical contract: pcell directory partitioning + cell filters
     reach the scan (PartitionFilters / PushedFilters in the plan)."""
