@@ -23,3 +23,7 @@ Architecture (see SURVEY.md for the full blueprint):
 """
 
 __version__ = "0.1.0"
+
+from openpoiservice_spark import _zipcache
+
+_zipcache.install_on_worker()

@@ -34,6 +34,7 @@ Scale properties:
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterable, Iterator
 
 import numpy as np
@@ -201,14 +202,13 @@ def auto_salt_cells(pcell_rows: dict[int, int], threshold: int,
 
 def _refine_fn(keep_cols: list[str], lon_col: str, lat_col: str,
                with_distance: bool = False, min_buffer_m: float = 0.0):
-    """mapInArrow body of the exact refine (round 7; was mapInPandas):
-    every candidate row carries the packed geometry JSON, and the pandas
-    conversion materialized one Python string object per candidate (~60 MB
-    and a few hundred ms per 300k candidates at sf0.1) only for the body
-    to look at ONE string per geometry group.  Arrow-native batches keep
-    `gspec` in its contiguous buffer — it is touched once per group via
-    .as_py(); lon/lat/geom_id convert zero-copy to numpy (guide §4.1/§4.2:
-    pass batches, hand whole batches to vectorized code)."""
+    """mapInArrow body of the exact refine.  Every candidate row carries
+    the packed geometry JSON `gspec`; the Arrow batch keeps it in its
+    contiguous buffer and the body reads it once per geometry group via
+    .as_py() (a pandas body would materialize one Python string per
+    candidate, ~60 MB and a few hundred ms per 300k candidates at sf0.1).
+    lon/lat/geom_id convert zero-copy to numpy and each group is refined
+    as one vectorized call."""
 
     def run(batches):
         import pyarrow as pa
@@ -455,8 +455,8 @@ def batch_knn(points: DataFrame, queries_df: DataFrame, k: int, res: int,
          re-probes next round with an expanded disk.  Rounds coarsen the
          join resolution so a disk never exceeds (2*max_ring+1)^2 cells —
          planet-wide fallback terminates at res 0 (fence = +inf).
-    The per-round driver work is one boolean/count action over the failing
-    set; queries and radii stay DataFrame-resident throughout (no collect
+    The per-round driver work is one action over the failing set (its
+    size and largest next radius, one aggregate); queries and radii stay DataFrame-resident throughout (no collect
     of the query set).
 
     salt_cells: the same lineage-driven skew map the batch join takes
@@ -568,7 +568,7 @@ def batch_knn(points: DataFrame, queries_df: DataFrame, k: int, res: int,
                 F.greatest(F.col("r") * 2, dk_term)
             ).cast("long").alias("r_next"))
         fail_meta.cache()
-        n_fail = fail_meta.count()
+        n_fail, mx = fail_meta.agg(F.count("*"), F.max("r_next")).first()
         if n_fail == 0:
             done = topk if done is None else done.unionByName(topk)
             fail_meta.unpersist()
@@ -583,10 +583,7 @@ def batch_knn(points: DataFrame, queries_df: DataFrame, k: int, res: int,
         # pick next round's res so the LARGEST needed disk stays within
         # max_ring cells (bounded cover size per query however far the
         # expansion must reach); everyone's radius rescales to the new res
-        import math as _math
-
-        mx = int(fail_meta.agg(F.max("r_next")).first()[0])
-        shift = (int(_math.ceil(_math.log2(mx / max_ring)))
+        shift = (int(math.ceil(math.log2(mx / max_ring)))
                  if mx > max_ring else 0)
         res_next = max(res_r - shift, 0)
         eff = res_r - res_next  # may be < shift when res floors at 0 ...
@@ -629,8 +626,8 @@ def batch_join_counts(points: DataFrame, geoms_df: DataFrame, res: int,
     dedup=True collapses duplicate (geom_id, point) pairs BEFORE counting —
     required when the geometry layer came from geomtext's multi-part
     fan-out (one GEOM_SCHEMA row per MultiPolygon part shares the geom_id,
-    so a point inside two parts of one geometry otherwise counts twice;
-    round-5 ADVICE).  Point identity is keep_cols[0], which must UNIQUELY
+    so a point inside two parts of one geometry otherwise counts twice).
+    Point identity is keep_cols[0], which must UNIQUELY
     identify a point — with a non-unique key (e.g. a per-category exploded
     view) dedup also collapses same-key rows.  Costs one extra
     partial-aggregable distinct on the pair keys; leave False for
@@ -690,9 +687,8 @@ def batch_nearest(points: DataFrame, geoms_df: DataFrame, res: int,
     its region' pipeline op (one row per matched point: *keep_cols,
     nearest_geom).
 
-    Candidacy contract (round-4 verdict 'What's wrong' #2 — the default is
-    radius-BOUNDED and silently drops out-of-reach points, so both escape
-    hatches are explicit):
+    Candidacy contract (the default is radius-BOUNDED and drops points out
+    of every geometry's reach, so both escape hatches are explicit):
       * default: candidates are geometries whose own buffer reaches the
         point (the original gate-matched semantics);
       * max_radius=R: every geometry within R meters is a candidate too

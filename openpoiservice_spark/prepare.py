@@ -385,7 +385,8 @@ def load_pcell_stats(spark: SparkSession, prepared_dir: str) -> dict[int, int]:
     import/merge/compact rows carry the pcell TOTAL after the run (merge
     dynamically overwrites whole pcells); stream rows carry per-BATCH
     appended deltas — so the live count is the latest snapshot plus every
-    stream delta committed after it.  Plain Python over `lineage_rows`."""
+    stream delta committed after it; pcells whose live count is 0 (emptied
+    by a merge's deletes) are left out.  Plain Python over `lineage_rows`."""
     snap: dict[int, tuple[float, int]] = {}
     deltas: dict[int, list[tuple[float, int]]] = {}
     for r in lineage_rows(spark, prepared_dir):
@@ -399,7 +400,9 @@ def load_pcell_stats(spark: SparkSession, prepared_dir: str) -> dict[int, int]:
     out: dict[int, int] = {}
     for pc in snap.keys() | deltas.keys():
         base_ts, base = snap.get(pc, (float("-inf"), 0))
-        out[pc] = base + sum(n for ts, n in deltas.get(pc, ()) if ts > base_ts)
+        n = base + sum(n for ts, n in deltas.get(pc, ()) if ts > base_ts)
+        if n:
+            out[pc] = n
     return out
 
 
@@ -696,8 +699,10 @@ def _merge_locked(spark, prepared_dir, ups, delete_keys, run_id, t0) -> dict:
     )
     merged.unpersist()
     # dynamic overwrite only rewrites directories that receive rows; a pcell
-    # fully emptied by deletes must be dropped explicitly
-    for pc in set(affected) - counts.keys():
+    # fully emptied by deletes must be dropped explicitly, and gets an
+    # n_rows=0 snapshot so the stats forget its old count
+    emptied = set(affected) - counts.keys()
+    for pc in emptied:
         fs, p = _hadoop_fs(spark, f"{data_path(prepared_dir)}/pcell={pc}")
         fs.delete(p, True)
 
@@ -707,6 +712,6 @@ def _merge_locked(spark, prepared_dir, ups, delete_keys, run_id, t0) -> dict:
         dict(run_id=run_id, op="merge", fingerprint="merge", pcell=pc,
              n_rows=n, approx_bytes=0, wall_ms=wall_ms,
              status="committed", ts=ts)
-        for pc, n in counts.items()
+        for pc, n in sorted({**counts, **dict.fromkeys(emptied, 0)}.items())
     ])
     return {"pcells": len(affected), "rows": sum(counts.values()), "run_id": run_id}

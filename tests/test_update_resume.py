@@ -264,6 +264,32 @@ def test_merge_drops_fully_emptied_pcell(spark, tmp_path_factory):
     assert after.count() == total_before - len(keys)
 
 
+def test_merge_emptying_a_pcell_resets_its_stats(spark, tmp_path_factory):
+    """A merge that deletes the only row of a pcell commits an n_rows=0
+    snapshot for it, so the planner stats drop the pcell instead of keeping
+    its old count."""
+    root = tmp_path_factory.mktemp("empty_stats")
+    raw = str(root / "raw.parquet")
+    prepared = str(root / "prepared")
+    fixtures.build_sf_test(raw, n_filler=300)
+    prepare.prepare(spark, raw, prepared)
+
+    cur = prepare.read_prepared(spark, prepared)
+    victim = min(cur.groupBy("pcell").count().collect(),
+                 key=lambda r: (r["count"], r.pcell))
+    assert victim["count"] == 1
+    key = cur.filter(F.col("pcell") == victim.pcell).select("osm_type", "osm_id").first()
+    empty_ups = spark.createDataFrame([], spark.read.parquet(raw).schema)
+    prepare.merge(spark, prepared, empty_ups, [(key.osm_type, key.osm_id)])
+
+    live = {r.pcell: r["count"] for r in
+            prepare.read_prepared(spark, prepared).groupBy("pcell").count().collect()}
+    assert victim.pcell not in live
+    assert prepare.load_pcell_stats(spark, prepared) == live
+    assert {(r["pcell"], r["n_rows"]) for r in prepare.lineage_rows(spark, prepared)
+            if r["op"] == "merge"} == {(victim.pcell, 0)}
+
+
 def test_jsonl_and_csv_sources_match_parquet_import(spark, tmp_path):
     """Source-format parity: the same raw rows ingested from JSONL and CSV
     (base64 payloads) produce a prepared table answering the golden query
