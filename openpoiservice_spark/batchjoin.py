@@ -455,9 +455,9 @@ def batch_knn(points: DataFrame, queries_df: DataFrame, k: int, res: int,
          re-probes next round with an expanded disk.  Rounds coarsen the
          join resolution so a disk never exceeds (2*max_ring+1)^2 cells —
          planet-wide fallback terminates at res 0 (fence = +inf).
-    The per-round driver work is one action over the failing set (its
-    size and largest next radius, one aggregate); queries and radii stay DataFrame-resident throughout (no collect
-    of the query set).
+    The per-round driver work is one aggregate over the failing set (its
+    size and largest next radius); queries and radii stay DataFrame-resident
+    throughout (no collect of the query set).
 
     salt_cells: the same lineage-driven skew map the batch join takes
     (auto_salt_cells) — a hot urban cell's candidate rows fan out S ways

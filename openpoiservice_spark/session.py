@@ -3,9 +3,8 @@
 All defaults target the 100 TB design point scaled to local mode: AQE on
 (runtime re-plan + skew-join splitting), Arrow on (the per-row Python
 stages — image decode, batch-join refine, operators — ride Arrow batches),
-partition sizing that keeps scan tasks in the 128 MB range.  The fixed
-per-task cost of a Python worker (a re-read of pyspark.zip before every
-task) is cut inside the workers, by `_zipcache`, not by a setting here.
+partition sizing that keeps scan tasks in the 128 MB range.  A Python
+worker's fixed per-task cost is cut inside the workers (`_zipcache`).
 """
 
 from __future__ import annotations
