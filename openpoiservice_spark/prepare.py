@@ -400,9 +400,9 @@ def load_pcell_stats(spark: SparkSession, prepared_dir: str) -> dict[int, int]:
     out: dict[int, int] = {}
     for pc in snap.keys() | deltas.keys():
         base_ts, base = snap.get(pc, (float("-inf"), 0))
-        n = base + sum(n for ts, n in deltas.get(pc, ()) if ts > base_ts)
-        if n:
-            out[pc] = n
+        live = base + sum(n for ts, n in deltas.get(pc, ()) if ts > base_ts)
+        if live:
+            out[pc] = live
     return out
 
 

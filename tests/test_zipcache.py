@@ -84,7 +84,10 @@ def test_reused_worker_keeps_pyspark_zip_directory(spark):
                             "installed": [installed], "stamped": [stamped],
                             "kept": [kept]})
 
-    df = spark.range(0, 2, numPartitions=2)
+    # idle workers are handed out in turn, so run more tasks than the
+    # session's pool can hold for pids to repeat
+    n = 2 * spark.sparkContext.defaultParallelism
+    df = spark.range(0, n, numPartitions=n)
     rows = []
     for _ in range(4):
         rows += df.mapInPandas(
