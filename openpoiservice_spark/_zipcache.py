@@ -19,15 +19,19 @@ zip shipped again) is still seen on the next task.  The package
 Python worker (pyspark sets ``SparkFiles._is_running_on_worker`` before it
 unpickles a task's functions, and every Python stage of the package imports
 the package) and only before Python 3.13, whose zipimport already
-invalidates lazily.  An importer's first call through the replacement has
-no stamp yet and re-reads, so a worker pays the full re-read up to the task
-after the one that first imported the package.
+invalidates lazily.  ``install`` also stamps each cached importer whose
+archive was last modified before this process started: pyspark re-read
+every cached importer's archive after that start (the ``setup_spark_files``
+call above, which precedes the unpickling that imports this package), so
+its directory is current.  Where the start time cannot be read (no
+``/proc``), an importer's first call through the replacement re-reads.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import time
 import zipimport
 
 _read_always = zipimport.zipimporter.invalidate_caches
@@ -51,8 +55,34 @@ def _invalidate_if_changed(self) -> None:
     setattr(self, _STAMP, stamp)
 
 
+def _process_start_ns():
+    """This process's start on the wall clock, in ns, or None.  The boot
+    time in /proc/stat is whole seconds, truncated, so the value errs
+    early, which only leaves an archive unstamped."""
+    try:
+        with open("/proc/self/stat", "rb") as f:
+            # fields after the parenthesised command name; starttime is 22nd
+            ticks = int(f.read().rsplit(b")", 1)[1].split()[19])
+        with open("/proc/stat", "rb") as f:
+            btime = next(int(line.split()[1]) for line in f
+                         if line.startswith(b"btime "))
+        hz = os.sysconf("SC_CLK_TCK")
+    except (OSError, ValueError, IndexError, StopIteration):
+        return None
+    start = btime * 10**9 + ticks * 10**9 // hz
+    return start if start <= time.time_ns() else None
+
+
 def install() -> None:
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+    start = _process_start_ns()
+    if start is None:
+        return
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, zipimport.zipimporter):
+            stamp = _archive_stamp(imp.archive)
+            if stamp is not None and stamp[0] < start:
+                setattr(imp, _STAMP, stamp)
 
 
 def install_on_worker() -> None:

@@ -254,7 +254,7 @@ def hamming_pairs(df: DataFrame, col: str = "phash", key: str = "image_id",
 
     Pigeonhole guarantee: with `bands` equal bit-slices, any pair within
     hamming distance < bands shares at least one identical band, so the
-    banded equi-join finds EVERY pair with distance <= bands-1 (default
+    banded bucket pairing finds EVERY pair with distance <= bands-1 (default
     4 bands -> exhaustive for max_dist <= 3); the exact bit_count(xor)
     filter then removes false candidates.  Same shape as the MinHash/LSH
     text pipeline: shuffle keys are (band, band_bits), no all-pairs stage,
@@ -262,6 +262,8 @@ def hamming_pairs(df: DataFrame, col: str = "phash", key: str = "image_id",
     thumbnails all hashing to one value).
     """
     from pyspark.sql import functions as F
+
+    from .pairs import bucket_pairs
 
     if bands is None:
         # smallest divisor of 64 exceeding max_dist keeps the pigeonhole
@@ -283,33 +285,13 @@ def hamming_pairs(df: DataFrame, col: str = "phash", key: str = "image_id",
     ])
     e = b.select("k", "fp", F.explode(slices).alias("bb")) \
          .select("k", "fp", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    # Round 7: groupBy + collect_list + in-bucket expansion instead of the
-    # banded self-join — the join planned the whole upstream subtree (for
-    # dct_phash inputs: the full image DECODE pass) once per side, and the
-    # max_bucket census a third/fourth time (8 scan+decode subtrees in the
-    # bench plan).  One aggregation computes the fingerprints exactly once;
-    # the size cap is a free filter on the same aggregate; sorted-list
-    # combinations reproduce the join's l.k < r.k pairs exactly (a key
-    # appears once per bucket), and the same distinct collapses cross-band
-    # duplicates.  See text._pairs_from_banded for the full rationale.
-    arr = F.array_sort(F.collect_list(F.struct(F.col("k"), F.col("fp")))) \
-        .alias("ks")
-    buckets = e.groupBy("band", "bh").agg(arr)
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ks") <= max_bucket)
-    ks = F.col("ks")
-    expand = F.flatten(F.transform(
-        ks, lambda x, i: F.transform(
-            F.slice(ks, i + F.lit(2), F.size(ks)),
-            lambda y: F.struct(x["k"].alias("key_a"), y["k"].alias("key_b"),
-                               x["fp"].alias("fp_a"), y["fp"].alias("fp_b")))))
+    p = bucket_pairs(e, ["band", "bh"], F.struct("k", "fp"), max_bucket)
     cand = (
-        buckets.select(F.explode(expand).alias("p"))
-        # strict <, not positional: the key column may carry DUPLICATES
-        # (the prepared table holds multiple rows per image_id by design)
-        # and the old join's l.k < r.k excluded equal-key pairs
-        .filter(F.col("p.key_a") < F.col("p.key_b"))
-        .select("p.key_a", "p.key_b", "p.fp_a", "p.fp_b")
+        # strict <: the key column may repeat (the prepared table holds
+        # several rows per image_id), and equal keys are not a pair
+        p.filter(F.col("a.k") < F.col("b.k"))
+        .select(F.col("a.k").alias("key_a"), F.col("b.k").alias("key_b"),
+                F.col("a.fp").alias("fp_a"), F.col("b.fp").alias("fp_b"))
         .distinct()
     )
     dist = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))

@@ -4,19 +4,19 @@ Scale notes (the 100 TB design point):
   * every operator is a pure DataFrame pipeline — shingle/token explosion is
     the only row-multiplying step and it map-side-combines into per-doc
     aggregates before any shuffle;
-  * MinHash-LSH turns O(n^2) near-dup search into an equi-join on
-    (band, band_hash) — the classic shingle -> minhash -> band -> bucket-join
-    pipeline; bucket sizes are bounded by banding so the self-join never
-    quadratically explodes except on true near-dup clusters;
+  * MinHash-LSH turns O(n^2) near-dup search into pairing within
+    (band, band_hash) buckets — the classic shingle -> minhash -> band ->
+    bucket pipeline, expanded by `pairs.bucket_pairs`; banding keeps
+    buckets small except on true near-dup clusters, which `max_bucket`
+    caps;
   * hashes are md5-based (bit-identical in DuckDB) rather than xxhash: the
     goal here is portability of the correctness oracle; swap HASH_EXPR for
     `xxhash64` on a production cluster for ~3x hash throughput;
   * MinHash hashes each shingle ONCE and derives the k permutations
     arithmetically — (a_i*h + b_i) mod p over int64, pure column math inside
-    whole-stage codegen.  The round-1 design (md5(shingle || '#i') per
-    permutation) spent 8 md5+conv evaluations per shingle and was 72%% of the
-    bench wall; the single-hash form removes 7/8 of the hash CPU and is the
-    textbook universal-hash family, so Jaccard-estimation quality is the same.
+    whole-stage codegen.  One md5 per shingle instead of one per
+    permutation (md5(shingle || '#i')) is 1/k of the hash CPU, and the
+    textbook universal-hash family keeps the Jaccard-estimation quality.
 """
 
 from __future__ import annotations
@@ -24,6 +24,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .pairs import bucket_pairs
 
 # 32-bit integer hash from a string, identical in Spark and DuckDB:
 #   Spark : conv(substring(md5(x), 1, 8), 16, 10)::long
@@ -72,9 +74,9 @@ def shingles(docs: DataFrame, n: int = 5) -> DataFrame:
 
     The input is `_spread` first (ann.py's parallelism guard): a corpus
     read as one/few parquet partitions runs the explode + every
-    downstream per-shingle hash on one core — and now that the candidate
-    pipeline computes each subtree exactly once (_pairs_from_banded),
-    there is no accidental stage overlap to hide that (bench cpu_env:
+    downstream per-shingle hash on one core — and the candidate pipeline
+    computes each subtree exactly once (`bucket_pairs`), so no
+    overlapping stage hides that (bench cpu_env:
     89-94% idle on the text lanes at 32 cores).  The repartition shuffles
     raw docs (cheap) so the 10-100x larger shingle stream parallelizes; a
     table with adequate partitioning — the 100 TB case — passes through
@@ -104,9 +106,9 @@ def minhash_signatures(docs: DataFrame, k: int = 8, n: int = 5,
     perm i = min over shingles of (a_i*h + b_i) mod p.  One explode, k
     map-side mins, one shuffle.
 
-    shingles_df: precomputed `shingles(docs, n)` output to reuse (round-5
-    verdict item 5 — the dedup pipeline shares ONE shingle explode between
-    the signature and intersection stages instead of re-scanning the text).
+    shingles_df: precomputed `shingles(docs, n)` output to reuse (the dedup
+    pipeline shares ONE shingle explode between the signature and
+    intersection stages instead of re-scanning the text).
     with_sizes=True adds the per-doc distinct-shingle count (`n_sh`) to the
     SAME aggregation — zero extra shuffle for the Jaccard denominator."""
     a, b = minhash_params(k)
@@ -153,60 +155,30 @@ def lsh_bucket_stats(docs: DataFrame, k: int = 8, bands: int = 2, n: int = 5,
 def lsh_candidate_pairs(docs: DataFrame, k: int = 8, bands: int = 2, n: int = 5,
                         max_bucket: int | None = None,
                         hash_fn: str = "md5") -> DataFrame:
-    """Band the signatures and self-join on (band, band_hash): docs agreeing
-    on any band become a candidate pair (doc_a < doc_b).
+    """Band the signatures and pair within (band, band_hash) buckets: docs
+    agreeing on any band become a candidate pair (doc_a < doc_b).
 
     max_bucket: skew guard for the 100 TB design point.  A degenerate bucket
-    (boilerplate cluster: every doc identical) makes the self-join quadratic
-    IN THAT BUCKET; buckets larger than max_bucket are excluded from pairing
-    (their membership is boilerplate near-dup by construction — handle them
-    via exact_dedup / lsh_bucket_stats, which is O(n), not O(n^2)).  The
-    count filter is one extra partial-agg on the same (band, bhash) shuffle
-    keys the join needs anyway.  None = no cap (the correctness-gate
-    configuration on bounded fixtures)."""
+    (boilerplate cluster: every doc identical) has quadratically many pairs;
+    buckets larger than max_bucket are excluded from pairing (their
+    membership is boilerplate near-dup by construction — handle them via
+    exact_dedup / lsh_bucket_stats, which is O(n), not O(n^2)); a cap
+    below 1000 also cuts each bucket to max_bucket + 1 rows before the
+    bucket shuffle (`bucket_pairs`).
+    None = no cap (the correctness-gate configuration on bounded
+    fixtures)."""
     return _pairs_from_banded(_banded(docs, k, bands, n, hash_fn), max_bucket)
 
 
 def _pairs_from_banded(banded: DataFrame,
                        max_bucket: int | None) -> DataFrame:
-    """Candidate pairs from the (doc_id, band, bhash) frame — ONE
-    aggregation per bucket + in-bucket pair expansion.
-
-    Round 7: the former shape (banded self-JOIN on (band, bhash)) planned
-    the ENTIRE upstream subtree twice — the shingle explode + per-shingle
-    hash + signature aggregation ran once per join side (a broadcast hash
-    join cannot reuse the other side's exchange), and the max_bucket guard
-    re-derived it a third time for the bucket census.  groupBy +
-    collect_list computes the subtree ONCE, the bucket-size cap becomes a
-    free `size(list) <= max_bucket` filter on the same aggregate, and the
-    pair expansion (sorted list -> all a < b combinations) is a JVM
-    higher-order expression that parallelizes across the bucket shuffle's
-    reducers.  At 100 TB this also replaces broadcasting the whole banded
-    corpus (the old build side) with one keyed shuffle of it.  Per-bucket
-    memory is O(bucket size); degenerate buckets are exactly what
-    max_bucket exists to cap (route them to exact_dedup — see
-    lsh_candidate_pairs).  Output is identical: within a bucket each doc
-    appears once, so sorted-list combinations reproduce the join's
-    l.doc_id < r.doc_id pairs exactly, and the same distinct collapses
-    cross-band duplicates."""
-    arr = F.array_sort(F.collect_list("doc_id")).alias("ds")
-    buckets = banded.groupBy("band", "bhash").agg(arr)
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ds") <= max_bucket)
-    ds = F.col("ds")
-    expand = F.flatten(F.transform(
-        ds, lambda x, i: F.transform(
-            F.slice(ds, i + F.lit(2), F.size(ds)),
-            lambda y: F.struct(x.alias("a"), y.alias("b")))))
-    return (
-        buckets.select(F.explode(expand).alias("p"))
-        # strict <, not positional: robust to duplicate ids (the banded
-        # frame is unique per (doc, band) by construction, but an external
-        # caller's frame may not be — the old join's l < r excluded ties)
-        .filter(F.col("p.a") < F.col("p.b"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
-        .distinct()
-    )
+    """Candidate pairs (doc_a < doc_b) from the (doc_id, band, bhash) frame:
+    docs sharing any band bucket, each pair once.  Strict `<` also drops
+    pairs of equal ids from a frame that repeats a doc in one bucket."""
+    p = bucket_pairs(banded, ["band", "bhash"], F.col("doc_id"), max_bucket)
+    return (p.filter(F.col("a") < F.col("b"))
+            .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+            .distinct())
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2, n: int = 5,
@@ -218,10 +190,9 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2, n: int = 5,
     """Near-duplicate pairs with exact n-gram Jaccard >= threshold, computed
     only for LSH candidate pairs (verification join, not O(n^2)).
 
-    ONE shingle explode feeds the whole pipeline (round-5 verdict item 5 —
-    previously the signature, size, and intersection stages each re-derived
-    `shingles(docs)`, i.e. 3 full text scans + explodes at 100 TB): the
-    per-doc shingle counts ride the signature aggregation (`with_sizes`),
+    ONE shingle explode feeds the whole pipeline, not one per stage (3
+    full text scans + explodes at 100 TB): the per-doc shingle counts
+    ride the signature aggregation (`with_sizes`),
     and the raw shingle frame is shared between the banding and
     intersection stages.  The exact-intersection join reads shingles of
     CANDIDATE docs only (semi-join on the pair frame's doc ids before the
@@ -243,7 +214,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2, n: int = 5,
     if cache:
         # one row per doc; consumed by BOTH the banding subtree and the
         # Jaccard-denominator join — without this the signature aggregation
-        # re-scans the (much larger) shingle frame twice (round 7)
+        # re-scans the (much larger) shingle frame twice
         sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
     cand = _pairs_from_banded(
         _banded_from_sig(sig.drop("n_sh"), k, bands), max_bucket)
@@ -259,9 +230,8 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.2, n: int = 5,
     # hash join over the cached shingle scan, not another big shuffle)
     touched = cand.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
-    # left_semi tolerates duplicate probe keys, so the former
-    # touched.distinct() exchange is gone (round 7: one less shuffle +
-    # codegen stage on the verification path; same restriction semantics)
+    # left_semi tolerates duplicate probe keys, so `touched` needs no
+    # distinct (and no exchange for one)
     sh_c = sh.join(F.broadcast(touched), "doc_id", "left_semi")
     inter = (
         cand.join(sh_c.withColumnRenamed("doc_id", "doc_a"), "doc_a")
@@ -328,6 +298,28 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5,
     return docs.join(bad, "doc_id", "left_anti")
 
 
+def _increment_candidates(allb: DataFrame,
+                          max_bucket: int | None) -> DataFrame:
+    """(loser, other, other_new) candidates from the banded union of new
+    (`is_new`) and resident docs: each new doc (the loser) pairs with every
+    resident sharing a bucket and with the new docs of smaller id, so
+    resident x resident pairs are never built (the `b.is_new` filter runs
+    below the kernel's expansion).  Members sort residents first; a
+    replayed doc_id on both sides pairs with itself.  The bucket cap counts
+    both sides: a boilerplate bucket is degenerate whichever frame its
+    members came from."""
+    p = bucket_pairs(allb, ["band", "bhash"], F.struct("is_new", "doc_id"),
+                     max_bucket)
+    return (
+        p.filter(F.col("b.is_new")
+                 & (~F.col("a.is_new") | (F.col("a.doc_id") < F.col("b.doc_id"))))
+        .select(F.col("b.doc_id").alias("loser"),
+                F.col("a.doc_id").alias("other"),
+                F.col("a.is_new").alias("other_new"))
+        .distinct()
+    )
+
+
 def dedup_increment(new_docs: DataFrame, resident: DataFrame,
                     threshold: float = 0.2, n: int = 5, k: int = 8,
                     bands: int = 2, max_bucket: int | None = None,
@@ -383,39 +375,7 @@ def dedup_increment(new_docs: DataFrame, resident: DataFrame,
     rb = (_banded(resident, k, bands, n, hash_fn)
           if resident_banded is None else resident_banded) \
         .withColumn("is_new", F.lit(False))
-    allb = nb.unionByName(rb)
-    # Round 7 (same restructure as _pairs_from_banded): the former
-    # lhs x rhs self-join on (band, bhash) planned the banding subtrees —
-    # including the RESIDENT corpus banding, the big side at deployment
-    # scale — once per join side, plus a third time for the max_bucket
-    # census.  One groupBy + collect_list computes them exactly once; the
-    # bucket cap is a free size filter on the same aggregate (population
-    # counted over BOTH sides: a boilerplate bucket is degenerate no
-    # matter which frame its members came from); the asymmetric pairing
-    # predicate (resident always candidates, new-vs-new smaller-id wins —
-    # including the replay self-pair where the same doc_id sits on both
-    # sides) is evaluated inside a JVM higher-order expression over the
-    # per-bucket list, reproducing the join's multiset before the same
-    # distinct.
-    arr = F.collect_list(F.struct(F.col("doc_id"), F.col("is_new"))) \
-        .alias("ks")
-    buckets = allb.groupBy("band", "bhash").agg(arr)
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ks") <= max_bucket)
-    ks = F.col("ks")
-    expand = F.flatten(F.transform(
-        F.filter(ks, lambda x: x["is_new"]),
-        lambda x: F.transform(
-            F.filter(ks, lambda y: (~y["is_new"])
-                     | (y["doc_id"] < x["doc_id"])),
-            lambda y: F.struct(x["doc_id"].alias("loser"),
-                               y["doc_id"].alias("other"),
-                               y["is_new"].alias("other_new")))))
-    cand = (
-        buckets.select(F.explode(expand).alias("p"))
-        .select("p.loser", "p.other", "p.other_new")
-        .distinct()
-    )
+    cand = _increment_candidates(nb.unionByName(rb), max_bucket)
 
     # 3. verify: shingle only the touched resident docs
     touched_res = cand.filter(~F.col("other_new")) \
@@ -540,11 +500,10 @@ def deterministic_split(docs: DataFrame, test_pct: int = 20,
     `near_dup_components` labels give a split key that keeps whole near-dup
     clusters together: split on the component id.
 
-    NULL content hashes as the empty string (round-5 ADVICE: F.concat
-    propagates NULL, so null-text docs all fell through the otherwise
-    branch into 'train' UNGUARDED — two null-text duplicates could land on
-    opposite sides; coalescing keys every null-text doc to the same bucket,
-    preserving the same-side guarantee).  content_col names the column
+    NULL content hashes as the empty string: F.concat propagates NULL, so
+    without the coalesce null-text docs would skip the hash and all land in
+    'train' unguarded; coalesced, every null-text doc keys to the same
+    bucket, keeping the same-side guarantee.  content_col names the column
     by_content hashes (mirrors key_col)."""
     if not 0 <= test_pct <= 100:
         raise ValueError("test_pct must be in [0, 100]")

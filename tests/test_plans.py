@@ -244,6 +244,34 @@ def test_hamming_pairs_plan_shape(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     pairs.count()  # executes
 
+    # capped, over dct_phash output: the decode stage runs once and the
+    # bucket cap adds no join (the cap is a window limit on the same keys)
+    from openpoiservice_spark import imaging
+
+    rng = np.random.default_rng(5)
+    imgs = spark.createDataFrame(
+        [(f"img{i}", imaging.encode_png(
+            rng.integers(0, 255, (16, 16, 3), dtype=np.uint8)), "png")
+         for i in range(6)],
+        "image_id string, bytes binary, fmt string")
+    capped = IM.hamming_pairs(IM.dct_phash(imgs), col="dct_phash",
+                              key="image_id", max_bucket=3)
+    plan = _plan(capped)
+    assert plan.count("MapInPandas") == 1
+    assert "Join" not in plan
+    capped.count()
+
+
+def test_capped_lsh_candidates_plan_one_scan_no_join(spark):
+    from openpoiservice_spark.operators import text as TX
+
+    docs = spark.createDataFrame(
+        [(i, f"document number {i % 7} with some shared words") for i in range(40)],
+        "doc_id long, text string")
+    plan = _plan(TX.lsh_candidate_pairs(docs, max_bucket=4))
+    assert plan.count("Scan") == 1
+    assert "Join" not in plan
+
 
 def test_dateline_prefilter_lon_disjunction_pushes(spark, fixture_paths):
     """A dateline-crossing geometry's wrapped lon range reaches the parquet

@@ -98,6 +98,35 @@ def test_lsh_bucket_cap_defuses_degenerate_bucket(spark):
     stats = TX.lsh_bucket_stats(docs).filter("n_docs > 100").collect()
     assert stats and max(s.n_docs for s in stats) == 2000
 
+    # the same cap in the increment dedup: a new doc whose only candidates
+    # sit in the degenerate resident bucket is admitted once it is capped
+    boiler = rows[0][1]
+    resident = docs.filter("doc_id < 20000")
+    new = spark.createDataFrame(
+        [(30_000, "a fresh document about sailing boats and harbour tides"),
+         (30_001, "a fresh document about sailing boats and harbour tides"),
+         (30_002, boiler + "!"),
+         (30_003, rows[2029][1] + "!")], "doc_id long, text string")
+
+    def admitted(cap):
+        out = TX.dedup_increment(new, resident, max_bucket=cap).collect()
+        return {r.doc_id for r in out}
+
+    assert admitted(None) == {30_000}
+    assert admitted(100) == {30_000, 30_002}
+
+    # and in the image-side banded hamming pairs
+    from openpoiservice_spark.operators import images as IM
+
+    rng = np.random.default_rng(7)
+    fps = [(i, 0x5A5A_5A5A_5A5A_5A5A) for i in range(2000)]
+    fps += [(10_000 + i, int(v)) for i, v in
+            enumerate(rng.integers(-(1 << 62), 1 << 62, size=30))]
+    fps += [(20_001, fps[-1][1] ^ 0b101)]  # hamming 2 from 10_029
+    img = spark.createDataFrame(fps, "image_id long, phash long")
+    capped = IM.hamming_pairs(img, max_bucket=100).collect()
+    assert {(p.key_a, p.key_b, p.hamming) for p in capped} == {(10_029, 20_001, 2)}
+
 
 def test_ann_bucket_cap(spark):
     """Same guard on the embedding side: a degenerate bucket (identical

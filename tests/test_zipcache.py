@@ -5,13 +5,18 @@ on timing."""
 
 import importlib
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pytest
 
 from openpoiservice_spark import _zipcache
+
+REPO = Path(__file__).resolve().parents[1]
 
 pytestmark = pytest.mark.skipif(
     sys.version_info >= (3, 13), reason="zipimport invalidates lazily from 3.13")
@@ -55,6 +60,39 @@ def test_unchanged_zip_keeps_its_directory_and_rewritten_zip_is_reread(
         assert importlib.import_module("zc_mod_b").NAME == "zc_mod_b"
     finally:
         sys.path_importer_cache.pop(archive, None)
+
+
+def test_install_stamps_archives_older_than_the_process(tmp_path):
+    """At install, an importer over an archive last modified before the
+    process started is stamped, so its first invalidate_caches() keeps
+    `_files`; an archive rewritten after the start is not, so that call
+    re-reads it and its new module imports."""
+    old, new = str(tmp_path / "old.zip"), str(tmp_path / "new.zip")
+    _write_zip(old, ["zc_old_a"])
+    t = os.stat(old).st_mtime - 60
+    os.utime(old, (t, t))
+    _write_zip(new, ["zc_new_a"])
+    script = textwrap.dedent(f"""
+        import importlib, sys, zipfile
+        from openpoiservice_spark import _zipcache
+        old, new = {old!r}, {new!r}
+        sys.path[:0] = [old, new]
+        importlib.import_module("zc_old_a")
+        importlib.import_module("zc_new_a")
+        old_imp = sys.path_importer_cache[old]
+        files = old_imp._files
+        with zipfile.ZipFile(new, "w") as z:
+            z.writestr("zc_new_b.py", "NAME = 'zc_new_b'")
+        _zipcache.install()
+        importlib.invalidate_caches()
+        assert old_imp._files is files, "pre-start archive re-read"
+        assert importlib.import_module("zc_new_b").NAME == "zc_new_b"
+        print("OK")
+    """)
+    env = dict(os.environ, PYTHONPATH=str(REPO))
+    out = subprocess.run([sys.executable, "-c", script], env=env,
+                         capture_output=True, text=True, timeout=60)
+    assert out.stdout.strip() == "OK", out.stderr
 
 
 def test_reused_worker_keeps_pyspark_zip_directory(spark):
